@@ -1866,12 +1866,13 @@ def q_rule_filter(spark, sf_dir):
     gets (keep, reasons[]) naming exactly which rules fired — word-count
     bounds, mean word length, symbol ratio, bullet/ellipsis line fractions,
     alpha-word fraction, stop words, sentence count, placeholder text. One
-    codegen'd pass, staged word/line arrays, no shuffle."""
+    codegen'd pass, staged word/line arrays, no shuffle. The board row
+    carries reasons comma-joined: board columns are flat (hashable) types."""
     from ocr_spark.operators.text_analysis import rule_filter_select
 
     return rule_filter_select(
         _t(spark, sf_dir, "documents"), F.col("text"), params=_RULE_PARAMS
-    )
+    ).withColumn("reasons", F.array_join("reasons", ","))
 
 
 def q_temperature_sample(spark, sf_dir):
@@ -2245,7 +2246,11 @@ def _training_oracles(sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
             )
             + ")"
         ),
-        "rule_filter": TA.rule_filter_sql(params=_RULE_PARAMS),
+        # DuckDB's array_to_string([]) is NULL where Spark's array_join is ''
+        "rule_filter": (
+            "SELECT doc_id, keep, coalesce(array_to_string(reasons, ','), '') AS reasons "
+            f"FROM ({TA.rule_filter_sql(params=_RULE_PARAMS)})"
+        ),
         "temperature_sample": CC.temperature_sample_sql(
             "SELECT doc_id, lang FROM documents", _temp_thresholds(sf_dir)
         ),

@@ -29,6 +29,7 @@ standalone (operators/media_kernels.preprocess_pipeline).
 
 from __future__ import annotations
 
+import importlib
 import re
 from collections.abc import Iterator, Sequence
 
@@ -43,9 +44,8 @@ STAGE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("spans", T.ArrayType(SPAN_STRUCT, False), False),
-        T.StructField("confidence", T.DoubleType(), True),
-        # mergeable A2 parts: giant-doc chunking (pipeline span_chunk_threshold)
-        # recombines confidence across chunks as sum(conf_sum)/sum(conf_cnt)
+        # mergeable A2 parts; the pipeline derives confidence from them once,
+        # after giant-doc chunks (span_chunk_threshold) are summed per doc
         T.StructField("conf_sum", T.DoubleType(), True),
         T.StructField("conf_cnt", T.LongType(), True),
         T.StructField("error", T.StringType(), True),
@@ -53,8 +53,18 @@ STAGE_SCHEMA = T.StructType(
     ]
 )
 
-HEAVY = ("html", "pdf", "ocr", "media")
 MEDIA_KINDS = ("ocr", "media")
+
+# J1 media-engine selection: name → (module, batch recognizer), imported per
+# batch on the executor. The local ONNX-analogue kernel chain, the rotated-quad
+# geometry path (W1/F6/K9/K10), DB detection, or the cloud analogue (K13 PNG →
+# fake API → K14 flatten). Same batch contract for all of them.
+MEDIA_ENGINES = {
+    "local": ("ocr_spark.operators.media_kernels", "recognize_gray_batch"),
+    "local_warp": ("ocr_spark.operators.quad_geometry", "recognize_quad_batch"),
+    "local_db": ("ocr_spark.operators.db_detect", "recognize_db_batch"),
+    "cloud": ("ocr_spark.operators.cloud_engine", "recognize_cloud_batch"),
+}
 
 # per-doc payload map column attached by the sidecar join (pipeline);
 # consumed (and dropped) by the Arrow stage when backend == "sidecar"
@@ -199,27 +209,11 @@ def _process_batch(
     passthrough: tuple[str, ...] = (),
     media_engine: str = "local",
 ) -> pa.RecordBatch:
-    from ocr_spark.operators.media_kernels import recognize_gray_batch
     from ocr_spark.operators.registry import get_extractor
     from ocr_spark.sources.media import resolve_gray_batch
 
-    # J1 media-engine selection: the local ONNX-analogue kernel chain, the
-    # rotated-quad geometry path (W1/F6/K9/K10), or the cloud analogue
-    # (K13 PNG → fake API → K14 flatten). Same batch contract for all three.
-    if media_engine == "cloud":
-        from ocr_spark.operators.cloud_engine import recognize_cloud_batch
-
-        recognize_gray_batch = recognize_cloud_batch
-    elif media_engine == "local_warp":
-        from ocr_spark.operators.quad_geometry import recognize_quad_batch
-
-        recognize_gray_batch = recognize_quad_batch
-    elif media_engine == "local_db":
-        from ocr_spark.operators.db_detect import recognize_db_batch
-
-        recognize_gray_batch = recognize_db_batch
-    elif media_engine != "local":
-        raise ValueError(f"unknown media_engine {media_engine!r}")
+    module, fn = MEDIA_ENGINES[media_engine]
+    recognize_gray_batch = getattr(importlib.import_module(module), fn)
 
     # J2 registry lookup — executor-local lazy singletons (S4 analogue)
     extract_main_text = get_extractor("html_density")
@@ -338,24 +332,19 @@ def _process_batch(
     )
     new_spans = pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), new_flat)
 
-    # A2: overall confidence = mean of valid (>0) confidences over media
-    # spans, 0.0 if media spans exist but none valid, null if no media.
-    conf_np = np.where(conf_cnt > 0, conf_sum / np.maximum(conf_cnt, 1), 0.0)
-    conf_obj = [
-        (conf_np[i] if has_media[i] else None) for i in range(n_docs)
-    ]
+    # A2 parts, null for docs without media spans (confidence is derived from
+    # them in the pipeline's final select)
     conf_sum_obj = [(conf_sum[i] if has_media[i] else None) for i in range(n_docs)]
     conf_cnt_obj = [(int(conf_cnt[i]) if has_media[i] else None) for i in range(n_docs)]
     arrays = [
         doc_id,
         new_spans,
-        pa.array(conf_obj, type=pa.float64()),
         pa.array(conf_sum_obj, type=pa.float64()),
         pa.array(conf_cnt_obj, type=pa.int64()),
         pa.array(err, type=pa.string()),
         pa.array(err_src, type=pa.string()),
     ]
-    names = ["doc_id", "spans", "confidence", "conf_sum", "conf_cnt", "error", "error_source"]
+    names = ["doc_id", "spans", "conf_sum", "conf_cnt", "error", "error_source"]
     for c in passthrough:
         arrays.append(batch.column(c))
         names.append(c)
@@ -375,9 +364,12 @@ def apply_heavy_kinds(
             `passthrough` columns copied verbatim to the output (used by the
             giant-doc chunking path to carry the chunk index through).
     Output: STAGE_SCHEMA (+ passthrough); extractor column added by caller.
-    media_engine: 'local' (DBNet/CRNN-analogue kernel chain) or 'cloud'
-            (PNG-encode → nested-response flatten, cloud_engine.py).
+    media_engine: a MEDIA_ENGINES name, checked here when the plan is built.
     """
+    if media_engine not in MEDIA_ENGINES:
+        raise ValueError(
+            f"unknown media_engine {media_engine!r}; expected one of {sorted(MEDIA_ENGINES)}"
+        )
     rules = list(rules)
     backend = media_resolver
 

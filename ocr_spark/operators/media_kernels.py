@@ -24,8 +24,6 @@ Every function is pure and deterministic so golden fixtures are stable.
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 
 # ---- fake-engine spec constants (shared with tests/reference_impl) ----------
@@ -533,10 +531,6 @@ def recognize_image(payload: bytes) -> tuple[str, float]:
             total += conf
             n += 1
     return "\n".join(texts), (total / n) if n else 0.0
-
-
-def media_sha_seed(media_ref: str) -> int:
-    return int.from_bytes(hashlib.sha256(media_ref.encode()).digest()[:8], "big")
 
 
 # ---------------------------------------------------------------------------

@@ -282,8 +282,9 @@ def test_unknown_media_engine_raises(spark):
     from ocr_spark.schema import DOC_SCHEMA
 
     docs = spark.createDataFrame(generate_docs(4), DOC_SCHEMA)
-    with pytest.raises(Exception):
-        extract_documents(docs, media_engine="nope").collect()
+    # checked when the plan is built, not in a Python worker at collect()
+    with pytest.raises(ValueError, match="unknown media_engine 'nope'"):
+        extract_documents(docs, media_engine="nope")
 
 
 def test_cloud_registry_impl():

@@ -400,7 +400,8 @@ class TestSparkE2E:
     def test_encrypted_pdf_through_extract_pipeline(self, spark):
         """An encrypted PDF doc in the interleaved-spans table extracts
         identically to its plaintext twin — the heavy-kind dispatch path
-        (pdf kind → extract_pdf_batch → pdf_crypt) under mapInArrow."""
+        (pdf kind → registry 'pdf_xycut' → pdf_layout.extract_pdf_text →
+        pdf_crypt) under mapInArrow."""
         from ocr_spark.pipeline import extract_documents
         from ocr_spark.schema import DOC_SCHEMA
 

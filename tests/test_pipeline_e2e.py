@@ -128,7 +128,8 @@ def test_span_order_is_offset_order(result_and_golden):
 def test_span_chunk_threshold_same_result(spark):
     """Giant-doc chunking (span_chunk_threshold) must be invisible in the
     output: identical spans, confidence (1e-9), and error envelope vs the
-    unchunked path — including a 3000-media-span pathological doc."""
+    unchunked path — including a 3000-media-span pathological doc, a
+    zero-span doc and a doc whose spans all share one offset."""
     from ocr_spark.fixtures import generate_docs, media_ref_for
     from ocr_spark.schema import DOC_SCHEMA
 
@@ -161,7 +162,18 @@ def test_span_chunk_threshold_same_result(spark):
             + [{"kind": "media", "text": None, "media_ref": None, "offset": 900}]
         ),
     }
-    df = spark.createDataFrame(docs + [giant, bad], DOC_SCHEMA)
+    empty = {"doc_id": "empty-0", "spans": []}  # zero spans: still one chunk row
+    # equal offsets across chunk boundaries: the stable A6 sort keeps input
+    # order, so chunks must re-merge in chunk order (this doc_id's three
+    # chunks land in salt partitions in reverse chunk order)
+    ties = {
+        "doc_id": "ties-3",
+        "spans": [
+            {"kind": "text", "text": f"t{k}", "media_ref": None, "offset": 0}
+            for k in range(600)
+        ],
+    }
+    df = spark.createDataFrame(docs + [giant, bad, empty, ties], DOC_SCHEMA)
 
     plain = {r.doc_id: r for r in extract_documents(df, rules=RULES).collect()}
     chunked = {
@@ -179,3 +191,20 @@ def test_span_chunk_threshold_same_result(spark):
         else:
             assert abs(a.confidence - b.confidence) < 1e-9, d
         assert (a.error, a.error_source) == (b.error, b.error_source), d
+
+
+def test_chunked_salted_plan_scans_once(spark, tmp_path):
+    """Chunking is one step of the single plan: with salting and chunking
+    on, the source is scanned once and the plan shuffles twice (salt
+    repartition, chunk re-merge)."""
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(generate_docs(20), DOC_SCHEMA).write.parquet(path)
+    out = extract_documents(
+        spark.read.parquet(path), rules=RULES, salt_partitions=4, span_chunk_threshold=8
+    )
+    assert len(out.collect()) == 20  # runs, and finalizes, this frame's own plan
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    plan = plan.split("== Initial Plan ==")[0]
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 2, plan

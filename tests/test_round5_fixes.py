@@ -148,6 +148,31 @@ class TestQueryBoardCap:
         assert m and int(m.group(1)) == len(E.queries())
 
 
+class TestBoardSchemaFlat:
+    def test_no_nested_columns_on_the_board(self, spark):
+        """Board rows are value-hashed cell by cell, and a list cell fails
+        with 'unhashable type' (rule_filter's array `reasons` did): every
+        board frame's top-level columns must be flat types. Only schemas
+        are checked; no frame is collected."""
+        import inspect
+        import os
+
+        from pyspark.sql import types as T
+
+        import __spark_entry__ as E
+
+        board_dir = inspect.signature(E.oracle_sql).parameters["sf_dir"].default
+        sf_dir = os.path.join(os.path.dirname(board_dir), "sf0.001")
+        nested = (T.ArrayType, T.MapType, T.StructType)
+        bad = [
+            (name, f.name)
+            for name, fn in E.queries().items()
+            for f in fn(spark, sf_dir).schema.fields
+            if isinstance(f.dataType, nested)
+        ]
+        assert bad == []
+
+
 class TestPhash64PurePython:
     def test_high_bit_hash_is_signed_python_int(self):
         from ocr_spark.operators.multimodal import phash64

@@ -88,16 +88,46 @@ def test_sidecar_e2e(spark, payload_dir):
     }
 
 
-def test_sidecar_rejects_multi_pass_modes(spark, payload_dir):
+def test_sidecar_with_chunking_same_result(spark, payload_dir):
+    """Giant-doc chunking composes with the sidecar: each chunk row carries
+    only its own payloads, and the re-merged output equals the sidecar-alone
+    run row for row — including a doc whose LAST chunk holds a missing ref."""
     from ocr_spark.pipeline import extract_documents
     from ocr_spark.schema import DOC_SCHEMA
 
     sidecar = sidecar_df(spark, str(payload_dir) + "/*.bin")
-    docs = spark.createDataFrame([("x", [("text", "t", None, 0)])], DOC_SCHEMA)
-    with pytest.raises(NotImplementedError):
-        extract_documents(docs, media_sidecar=sidecar, split_light=True)
-    with pytest.raises(NotImplementedError):
-        extract_documents(docs, media_sidecar=sidecar, span_chunk_threshold=4)
+    uris = sorted(r.media_ref for r in sidecar.collect() if "good" in r.media_ref)
+    long_doc = [
+        span
+        for k in range(5)
+        for span in (("text", f"t {k}", None, 2 * k), ("media", None, uris[k % 2], 2 * k + 1))
+    ] + [("ocr", None, "missing://last", 10)]  # 11 spans: 3 chunks of <= 4
+    docs = spark.createDataFrame(
+        [
+            ("long", long_doc),
+            ("short", [("media", None, uris[0], 0)]),
+            ("empty", []),
+        ],
+        DOC_SCHEMA,
+    )
+    alone = {r.doc_id: r for r in extract_documents(docs, media_sidecar=sidecar).collect()}
+    chunked = {
+        r.doc_id: r
+        for r in extract_documents(
+            docs, media_sidecar=sidecar, span_chunk_threshold=4, salt_partitions=3
+        ).collect()
+    }
+    assert set(chunked) == set(alone) == {"long", "short", "empty"}
+    for d, a in alone.items():
+        b = chunked[d]
+        assert (b.spans, b.extractor, b.error, b.error_source) == (
+            a.spans, a.extractor, a.error, a.error_source,
+        ), d
+        # chunk sums may add the same confidences in another order
+        assert b.confidence == pytest.approx(a.confidence, abs=1e-9), d
+    assert "unresolvable" in alone["long"].error
+    assert alone["long"].error_source == "ocr"
+    assert alone["long"].confidence is not None and alone["empty"].confidence is None
 
 
 def test_sidecar_duplicate_refs_tolerated(spark, payload_dir):
