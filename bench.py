@@ -1,6 +1,7 @@
-"""Per-round benchmark harness (driver contract).
+"""Benchmark harness.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
+`python bench.py` (no arguments) is the per-round driver contract: it runs
+the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ...}
@@ -10,16 +11,39 @@ synthetic interleaved corpus (sized to the sf), plus the heavier operator
 queries from __spark_entry__ over the driver tables. All timed executions
 force full computation via the `noop` sink (no output-write cost, no
 collect-to-driver bottleneck).
+
+`python bench.py --suite NAME [--scale N] [--cpus C] [--runs R]` runs one
+scale suite, scripts/bench_NAME.py, which holds only a `SCALE` default and
+`run(n, cpus) -> dict` (build the input, time the phases, assert exactness).
+The harness calls `run` R times (with R >= 2 the first call is a warm-up),
+stops any Spark session the suite started, and prints one JSON line: the
+suite's record of the last call, min/median/max wall seconds over the timed
+calls, and a fingerprint (commit, cpus, nproc, library versions). The line
+is appended to BENCH/history.jsonl tagged with "suite": NAME.
 """
 
 from __future__ import annotations
 
+import argparse
+import glob
+import importlib.util
 import json
 import os
+import platform
+import statistics
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
+
+HISTORY = os.path.join(REPO, "BENCH", "history.jsonl")
+NPROC = len(os.sched_getaffinity(0))
+SUITES = sorted(
+    os.path.basename(p)[len("bench_") : -len(".py")]
+    for p in glob.glob(os.path.join(REPO, "scripts", "bench_*.py"))
+)
 
 # docs per unit scale-factor for the synthetic interleaved corpus;
 # at sf0.1 → 5000 docs (~5% media-heavy with 256-1024 media spans each)
@@ -70,7 +94,7 @@ def _force(df) -> int:
     return 0
 
 
-def _corpus_path(n_docs: int) -> str:
+def corpus_path(n_docs: int) -> str:
     cache_dir = os.environ.get("SPARK_GRAFT_BENCH_CACHE", "/tmp/ocr_spark_bench")
     os.makedirs(cache_dir, exist_ok=True)
     path = os.path.join(cache_dir, f"docs_spans_{n_docs}.parquet")
@@ -81,7 +105,7 @@ def _corpus_path(n_docs: int) -> str:
     return path
 
 
-def main() -> None:
+def driver() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -91,7 +115,7 @@ def main() -> None:
     from ocr_spark.pipeline import extract_documents
     from ocr_spark.session import get_spark
 
-    corpus = _corpus_path(n_docs)
+    corpus = corpus_path(n_docs)
 
     spark = get_spark("ocr_spark_bench", cpus=cpus)
     timings: dict[str, float] = {}
@@ -134,36 +158,129 @@ def main() -> None:
         "docs_per_sec": round(n_docs / extract_sec, 1),
         "cpus": cpus,
     }
-    _append_history(result)
+    _append_history({**result, "ts": int(time.time()), "commit": _commit()})
     print(json.dumps(result))
 
 
-def _append_history(result: dict) -> None:
-    """Persist per-run, per-query timings to BENCH/history.jsonl so
-    round-over-round regression checks are mechanical (diffable history,
-    independent of the driver's BENCH_r{N}.json snapshots)."""
-    import subprocess
-
-    entry = dict(result)
-    entry["ts"] = int(time.time())
+def _commit() -> str | None:
     try:
-        entry["commit"] = (
-            subprocess.run(
-                ["git", "rev-parse", "--short", "HEAD"],
-                capture_output=True, text=True, timeout=10,
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-            ).stdout.strip()
-            or None
+        out = subprocess.run(
+            ["git", "rev-parse", "--short", "HEAD"],
+            capture_output=True, text=True, timeout=10, cwd=REPO,
         )
-    except Exception:
-        entry["commit"] = None
+        return out.stdout.strip() or None
+    except (OSError, subprocess.SubprocessError):
+        return None
+
+
+def _append_history(entry: dict) -> None:
+    """One line per run in BENCH/history.jsonl, so round-over-round checks
+    are mechanical (diffable history, independent of the driver's
+    BENCH_r{N}.json snapshots)."""
     try:
-        bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
-        os.makedirs(bench_dir, exist_ok=True)
-        with open(os.path.join(bench_dir, "history.jsonl"), "a") as f:
+        os.makedirs(os.path.dirname(HISTORY), exist_ok=True)
+        with open(HISTORY, "a") as f:
             f.write(json.dumps(entry) + "\n")
     except OSError:
         pass  # history is best-effort; the printed line is the contract
+
+
+def history(suite: str, scale: int) -> list[dict]:
+    """Earlier BENCH/history.jsonl lines of `suite` at `scale`."""
+    if not os.path.exists(HISTORY):
+        return []
+    with open(HISTORY) as f:
+        rows = [json.loads(line) for line in f if line.strip()]
+    return [r for r in rows if r.get("suite") == suite and r.get("scale") == scale]
+
+
+def _fingerprint(cpus: int) -> dict:
+    import numpy
+    import pyarrow
+    import pyspark
+
+    return {
+        "commit": _commit(),
+        "cpus": cpus,
+        "nproc": NPROC,
+        "python": platform.python_version(),
+        "pyspark": pyspark.__version__,
+        "pyarrow": pyarrow.__version__,
+        "numpy": numpy.__version__,
+    }
+
+
+def _load_suite(name: str):
+    # loaded by path and left out of sys.modules, so Spark pickles the
+    # suite's functions by value, as it did when each ran as __main__
+    path = os.path.join(REPO, "scripts", f"bench_{name}.py")
+    spec = importlib.util.spec_from_file_location(f"bench_{name}", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _active_spark():
+    if "pyspark" not in sys.modules:
+        return None
+    from pyspark.sql import SparkSession
+
+    return SparkSession.getActiveSession()
+
+
+def run_suite(name: str, scale: int | None, cpus: int, runs: int) -> None:
+    mod = _load_suite(name)
+    n = mod.SCALE if scale is None else scale
+    before = _active_spark()
+    walls: list[float] = []
+    try:
+        for _ in range(runs):
+            t0 = time.perf_counter()
+            rec = mod.run(n, cpus)
+            walls.append(time.perf_counter() - t0)
+    finally:
+        started = _active_spark()
+        if started is not None and started is not before:
+            started.stop()
+    timed = walls[1:] if runs >= 2 else walls
+    line = {
+        "suite": name,
+        "scale": n,
+        **_fingerprint(cpus),
+        "runs": runs,
+        "wall_s": {
+            "min": round(min(timed), 3),
+            "median": round(statistics.median(timed), 3),
+            "max": round(max(timed), 3),
+        },
+        "ts": int(time.time()),
+        "result": rec,
+    }
+    print(json.dumps(line))
+    _append_history(line)
+
+
+def parser() -> argparse.ArgumentParser:
+    ap = argparse.ArgumentParser(description="Run one scale suite (no arguments: the driver run).")
+    ap.add_argument("--suite", required=True, choices=SUITES)
+    ap.add_argument("--scale", type=int, help="input size; default: the suite's SCALE")
+    ap.add_argument(
+        "--cpus",
+        type=int,
+        default=int(os.environ.get("SPARK_GRAFT_CPUS", NPROC)),
+        help="local[] parallelism; default $SPARK_GRAFT_CPUS, else nproc",
+    )
+    ap.add_argument("--runs", type=int, default=1, help="timed calls; with >= 2 the first is a warm-up")
+    return ap
+
+
+def main(argv: list[str] | None = None) -> None:
+    argv = sys.argv[1:] if argv is None else argv
+    if not argv:
+        driver()
+        return
+    args = parser().parse_args(argv)
+    run_suite(args.suite, args.scale, args.cpus, max(1, args.runs))
 
 
 if __name__ == "__main__":

@@ -66,8 +66,8 @@ MEDIA_ENGINES = {
     "cloud": ("ocr_spark.operators.cloud_engine", "recognize_cloud_batch"),
 }
 
-# per-doc payload map column attached by the sidecar join (pipeline);
-# consumed (and dropped) by the Arrow stage when backend == "sidecar"
+# per-doc payload map column attached by the sidecar join (pipeline); when a
+# batch carries it, the Arrow stage resolves media from it (and drops it)
 MEDIA_SIDECAR_COL = "media_payloads"
 
 
@@ -205,7 +205,6 @@ def _postprocess_array(arr: pa.Array, rules) -> pa.Array:
 def _process_batch(
     batch: pa.RecordBatch,
     rules,
-    backend: str,
     passthrough: tuple[str, ...] = (),
     media_engine: str = "local",
 ) -> pa.RecordBatch:
@@ -273,10 +272,10 @@ def _process_batch(
     if m_idx.size:
         np.bitwise_or.at(has_media, doc_of_span[m_idx], True)
         refs = media_ref.take(pa.array(m_idx)).to_pylist()
-        if backend == "sidecar":
+        if MEDIA_SIDECAR_COL in batch.schema.names:
             grays, ok, errs = _resolve_sidecar(batch, refs, m_idx, doc_of_span)
         else:
-            grays, ok = resolve_gray_batch(refs, backend)
+            grays, ok = resolve_gray_batch(refs)
             errs = [
                 (int(j), ValueError(f"unresolvable media_ref: {refs[j]!r}"))
                 for j in np.flatnonzero(~ok)
@@ -354,7 +353,6 @@ def _process_batch(
 def apply_heavy_kinds(
     df,
     rules: Sequence[tuple[str, str]],
-    media_resolver: str = "synthetic",
     passthrough: tuple[str, ...] = (),
     media_engine: str = "local",
 ):
@@ -371,12 +369,11 @@ def apply_heavy_kinds(
             f"unknown media_engine {media_engine!r}; expected one of {sorted(MEDIA_ENGINES)}"
         )
     rules = list(rules)
-    backend = media_resolver
 
     schema = T.StructType(list(STAGE_SCHEMA.fields) + [df.schema[c] for c in passthrough])
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            yield _process_batch(batch, rules, backend, passthrough, media_engine)
+            yield _process_batch(batch, rules, passthrough, media_engine)
 
     return df.mapInArrow(gen, schema=schema)

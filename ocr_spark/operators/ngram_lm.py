@@ -42,7 +42,7 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.corpus_clean import _TOKEN_PATTERN
@@ -108,14 +108,13 @@ def _grams(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def _prune(counts: DataFrame, keys: list[str], top_k: int, min_count: int):
     """min_count floor, then deterministic top-k by (c desc, keys asc).
-    The global window runs over the post-floor gram table — vocab-sized
-    (and long-tail-free after the floor), not corpus-sized; top_k bounds
-    the model regardless of corpus scale."""
+    Sort+limit plans as TakeOrderedAndProject (per-partition top-k, then a
+    merge of k rows per partition), not a single-partition window; top_k
+    bounds the model regardless of corpus scale."""
     if min_count > 1:
         counts = counts.where(F.col("c") >= F.lit(min_count))
     order = [F.col("c").desc()] + [F.col(k).asc() for k in keys]
-    rn = F.row_number().over(Window.orderBy(*order))
-    return counts.withColumn("rn", rn).where(F.col("rn") <= top_k).drop("rn")
+    return counts.orderBy(*order).limit(top_k)
 
 
 def train_ngram_lm(

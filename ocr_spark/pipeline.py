@@ -147,7 +147,6 @@ def extract_documents(
     df: DataFrame,
     rules: Sequence[tuple[str, str]] = (),
     salt_partitions: int | None = None,
-    media_resolver: str = "synthetic",
     span_chunk_threshold: int | None = None,
     media_engine: str = "local",
     media_sidecar: DataFrame | None = None,
@@ -156,7 +155,8 @@ def extract_documents(
 
     media_sidecar: (media_ref, content) frame (sources.media.sidecar_df) for
     the production binaryFile path — broadcast-joined per doc (per chunk when
-    chunking), payloads decoded inside the Arrow stage (backend 'sidecar').
+    chunking), payloads decoded inside the Arrow stage. Without it, media
+    refs resolve to the synthetic fixture payloads (sources.media).
 
     rules: ordered literal replacement pairs (T5), applied to text-bearing
     output spans after whitespace canonicalization, exactly like the
@@ -182,15 +182,12 @@ def extract_documents(
         out = _chunk(out, span_chunk_threshold)
         key.append("chunk")
     if media_sidecar is not None:
-        media_resolver = "sidecar"
         out = _attach_sidecar(out, media_sidecar, key)
     if salt_partitions:
         # defeat media-heavy doc skew: spread rows across partitions by
         # hashed key (uniform), independent of input file layout
         out = out.repartition(salt_partitions, F.xxhash64(*key))
-    out = apply_heavy_kinds(
-        out, rules, media_resolver, passthrough=tuple(key[1:]), media_engine=media_engine
-    )
+    out = apply_heavy_kinds(out, rules, passthrough=tuple(key[1:]), media_engine=media_engine)
     if span_chunk_threshold:
         out = _merge_chunks(out)
 

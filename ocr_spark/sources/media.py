@@ -1,16 +1,15 @@
 """Media payload resolution (S1, ref ocr_workflow_orchestrator.py:153-178).
 
-A `media_ref` names an opaque binary payload. Backends:
+A `media_ref` names an opaque binary payload. Two sources:
 
-  * "synthetic" — deterministic bytes derived from the ref itself (sandbox
+  * synthetic — deterministic bytes derived from the ref itself (the
     default; the fake scan images the fixture corpus is built on).
   * sidecar ("binaryFile") — at production scale the payloads live in object
     storage; the pipeline broadcast-joins a `spark.read.format("binaryFile")`
     sidecar on media_ref (J3, SURVEY.md §2.3) instead of fetching per row.
     Wired end-to-end: `sidecar_df()` builds the frame,
     `pipeline.extract_documents(media_sidecar=...)` attaches per-doc payload
-    maps, and the Arrow stage decodes them (dispatch._resolve_sidecar,
-    backend "sidecar").
+    maps, and the Arrow stage decodes them (dispatch._resolve_sidecar).
 
 Resolution happens INSIDE the Arrow-batched UDF stage (executor-side), never
 on the driver.
@@ -100,19 +99,12 @@ def synth_media_bytes(media_ref: str) -> bytes:
     return synth_media_batch([media_ref])[0].tobytes()
 
 
-def resolve_gray_batch(
-    refs: list[str | None], backend: str = "synthetic"
-) -> tuple[np.ndarray, np.ndarray]:
+def resolve_gray_batch(refs: list[str | None]) -> tuple[np.ndarray, np.ndarray]:
     """Batch resolution straight to stacked grayscale images.
 
     Returns (grays: (N,32,32) uint8, ok: (N,) bool). Slots with a null /
     unresolvable ref have ok=False and undefined pixel content.
     """
-    if backend != "synthetic":
-        raise NotImplementedError(
-            f"media backend {backend!r}: production path is a broadcast join "
-            "against a binaryFile sidecar (see sidecar_df), not per-row fetch"
-        )
     ok = np.array([bool(r) for r in refs], dtype=bool)
     good = [r for r in refs if r]
     grays = np.zeros((len(refs), IMG_SIDE, IMG_SIDE), dtype=np.uint8)
@@ -121,13 +113,8 @@ def resolve_gray_batch(
     return grays, ok
 
 
-def resolve_batch(refs: list[str], backend: str = "synthetic") -> list[bytes | None]:
-    if backend != "synthetic":
-        raise NotImplementedError(
-            f"media backend {backend!r}: production path is a broadcast join "
-            "against a binaryFile sidecar (see sidecar_df), not per-row fetch"
-        )
-    grays, ok = resolve_gray_batch(refs, backend)
+def resolve_batch(refs: list[str]) -> list[bytes | None]:
+    grays, ok = resolve_gray_batch(refs)
     return [g.tobytes() if o else None for g, o in zip(grays, ok)]
 
 

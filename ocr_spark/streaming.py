@@ -58,7 +58,6 @@ def streaming_extract(
     checkpoint_dir: str,
     *,
     rules: Sequence[tuple[str, str]] = (),
-    media_resolver: str = "synthetic",
     media_engine: str = "local",
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
@@ -85,7 +84,6 @@ def streaming_extract(
         out = extract_documents(
             batch_df,
             rules=rules,
-            media_resolver=media_resolver,
             media_engine=media_engine,
             **extract_kw,
         )

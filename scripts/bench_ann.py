@@ -8,24 +8,21 @@ at 100 TB of embeddings that is the difference between an index that fits
 executor memory and one that doesn't). Codebooks train driver-side on a
 bounded corpus sample (one .limit() job), like a real offline index build.
 
-Usage: python scripts/bench_ann.py [--n 1000000] [--k 10] [--nprobe 4]
-Appends a JSON line to BENCH/ann_history.jsonl and prints it.
+Run: python bench.py --suite ann [--scale 1000000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
 from pyspark.sql import functions as F
 
+SCALE = 1_000_000
 DIM = 64
+K = 10
+NPROBE = 4
+N_CENTROIDS = 16
 
 
 def synth_emb(spark, n: int):
@@ -39,15 +36,7 @@ def synth_emb(spark, n: int):
     return spark.range(n).select(F.col("id").alias("vec_id"), v.alias("embedding"))
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--n", type=int, default=1_000_000)
-    ap.add_argument("--k", type=int, default=10)
-    ap.add_argument("--nprobe", type=int, default=4)
-    ap.add_argument("--n-centroids", type=int, default=16)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from ocr_spark.operators.similarity import (
         cosine_topk,
         ivf_topk,
@@ -56,26 +45,23 @@ def main() -> None:
     )
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_ann", cpus=args.cpus)
-    base = synth_emb(spark, args.n)
+    spark = get_spark("bench_ann", cpus=cpus)
+    base = synth_emb(spark, n)
 
     sample = np.array(
-        [r.embedding for r in base.limit(args.n_centroids * 256 + 1).collect()]
+        [r.embedding for r in base.limit(N_CENTROIDS * 256 + 1).collect()]
     )
     qv_np = sample[0]
     qv = [float(x) for x in qv_np]
-    centroids = sample[1 : args.n_centroids + 1].round(6)
+    centroids = sample[1 : N_CENTROIDS + 1].round(6)
     books = pq_train_residual(sample, centroids, m_sub=8, n_codes=16)
 
     # plant k-1 separable near-neighbors of the query (uniform noise has
     # only near-tie neighbors, which makes recall@k meaningless)
     rs = np.random.RandomState(9)
     planted = [
-        (
-            int(args.n + i),
-            [float(x) for x in (qv_np + 0.05 * rs.randn(DIM)).round(6)],
-        )
-        for i in range(args.k - 1)
+        (int(n + i), [float(x) for x in (qv_np + 0.05 * rs.randn(DIM)).round(6)])
+        for i in range(K - 1)
     ]
     emb = base.unionByName(
         spark.createDataFrame(planted, "vec_id long, embedding array<double>")
@@ -87,36 +73,19 @@ def main() -> None:
         rows = fn().collect()
         return round(time.perf_counter() - t0, 2), [r[0] for r in rows]
 
-    exact_s, exact_ids = timed(lambda: cosine_topk(emb, qv, k=args.k))
-    ivf_s, ivf_ids = timed(
-        lambda: ivf_topk(emb, qv, centroids, k=args.k, nprobe=args.nprobe)
-    )
+    exact_s, exact_ids = timed(lambda: cosine_topk(emb, qv, k=K))
+    ivf_s, ivf_ids = timed(lambda: ivf_topk(emb, qv, centroids, k=K, nprobe=NPROBE))
     pq_s, pq_ids = timed(
-        lambda: ivfpq_topk(emb, qv, centroids, books, k=args.k, nprobe=args.nprobe)
+        lambda: ivfpq_topk(emb, qv, centroids, books, k=K, nprobe=NPROBE)
     )
-
-    rec = {
-        "op": "ann_topk",
-        "n_vectors": args.n,
+    return {
         "dim": DIM,
-        "k": args.k,
-        "nprobe": args.nprobe,
+        "k": K,
+        "nprobe": NPROBE,
         "exact_sec": exact_s,
         "ivf_sec": ivf_s,
         "ivfpq_sec": pq_s,
-        "ivf_recall_vs_exact": round(len(set(ivf_ids) & set(exact_ids)) / args.k, 2),
-        "ivfpq_recall_vs_exact": round(len(set(pq_ids) & set(exact_ids)) / args.k, 2),
-        "ivfpq_vectors_per_sec": round(args.n / pq_s, 1),
+        "ivf_recall_vs_exact": round(len(set(ivf_ids) & set(exact_ids)) / K, 2),
+        "ivfpq_recall_vs_exact": round(len(set(pq_ids) & set(exact_ids)) / K, 2),
+        "ivfpq_vectors_per_sec": round(n / pq_s, 1),
     }
-    hist = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BENCH",
-        "ann_history.jsonl",
-    )
-    with open(hist, "a") as f:
-        f.write(json.dumps({**rec, "ts": int(time.time()), "cpus": args.cpus}) + "\n")
-    print(json.dumps(rec))
-
-
-if __name__ == "__main__":
-    main()

@@ -14,42 +14,29 @@ Exactness is closed-form and row-wise:
   normalized output peak must be within 0.06 dB of the -1 dBFS target on
   every row (peak_ok count == N).
 
-Run: python scripts/bench_audio_standardize.py [--assets 100000] [--cpus 32]
-Appends one JSON line to BENCH/audio_standardize_history.jsonl.
+Run: python bench.py --suite audio_standardize [--scale 100000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-HIST = os.path.join(REPO, "BENCH", "audio_standardize_history.jsonl")
+SCALE = 100_000
 
 # (rate, channels, n_samples) rotation — every duration ~0.25 s
 CONFIGS = [(8000, 1, 2000), (22050, 1, 5500), (44100, 2, 11000)]
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--assets", type=int, default=100_000)
-    ap.add_argument("--cpus", type=int, default=32)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     import numpy as np
+    import pandas as pd
     from pyspark.sql import functions as F
 
     from ocr_spark.operators.audio_codecs import wav_decode, wav_encode
     from ocr_spark.operators.multimodal import audio_standardize
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_audio_standardize", cpus=args.cpus)
-    n = args.assets
+    spark = get_spark("bench_audio_standardize", cpus=cpus)
 
     def payload(aid: int) -> bytes:
         rate, ch, ns = CONFIGS[aid % 3]
@@ -60,8 +47,6 @@ def main() -> None:
         return wav_encode(pcm, rate)
 
     def gen(batches):
-        import pandas as pd
-
         for pdf in batches:
             ids = pdf["id"].tolist()
             yield pd.DataFrame(
@@ -74,7 +59,7 @@ def main() -> None:
     t0 = time.time()
     assets = (
         spark.range(n)
-        .repartition(4 * args.cpus)
+        .repartition(4 * cpus)
         .mapInPandas(gen, schema="media_ref string, content binary")
         .persist()
     )
@@ -99,8 +84,6 @@ def main() -> None:
     ).cast("long")
 
     # row-wise peak check needs the decoded payload: one more Arrow stage
-    import pandas as pd
-
     def peaks(batches):
         for pdf in batches:
             ok = []
@@ -124,31 +107,15 @@ def main() -> None:
         .agg(F.sum(F.col("peak_ok").cast("long")))
         .first()[0]
     )
-    extract_wall = round(time.time() - t0, 2)
+    std_wall = round(time.time() - t0, 2)
+    assets.unpersist()
 
     assert agg["rows"] == n and agg["errs"] == 0, agg
     assert agg["bad_rate"] == 0 and agg["bad_src"] == 0, agg
     assert agg["bad_ch"] == 0 and agg["bad_ns"] == 0, agg
     assert n_peak_ok == n, (n_peak_ok, n)
-
-    rec = {
-        "bench": "audio_standardize",
-        "n_assets": n,
-        "cpus": args.cpus,
+    return {
         "synth_wall_s": synth_wall,
-        "std_wall_s": extract_wall,
-        "assets_per_sec": round(n / extract_wall),
-        "ts": int(time.time()),
+        "std_wall_s": std_wall,
+        "assets_per_sec": round(n / std_wall),
     }
-    print(
-        f"synth {synth_wall:7.2f} s   standardize+verify {extract_wall:7.2f} s "
-        f"({rec['assets_per_sec']:,} assets/s)"
-    )
-    with open(HIST, "a") as f:
-        f.write(json.dumps(rec) + "\n")
-    assets.unpersist()
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

@@ -11,33 +11,21 @@ Exactness is closed-form:
     the aid parsed back out of media_ref — zero mismatches);
   * per-language counts equal the rotation's arithmetic.
 
-Run: python scripts/bench_audio_tags.py [--assets 500000] [--cpus 32]
-Appends one JSON line to BENCH/audio_tags_history.jsonl.
+Run: python bench.py --suite audio_tags [--scale 500000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-HIST = os.path.join(REPO, "BENCH", "audio_tags_history.jsonl")
+SCALE = 500_000
 
 LANGS = ["en", "ja", "de", "fr", "ta"]
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--assets", type=int, default=500_000)
-    ap.add_argument("--cpus", type=int, default=32)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     import numpy as np
+    import pandas as pd
     from pyspark.sql import functions as F
 
     from ocr_spark.operators.audio_codecs import wav_encode
@@ -49,8 +37,7 @@ def main() -> None:
     )
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_audio_tags", cpus=args.cpus)
-    n = args.assets
+    spark = get_spark("bench_audio_tags", cpus=cpus)
 
     base_wav = wav_encode(
         (np.arange(400) % 128 * 100).astype(np.int16)[:, None], 8000
@@ -69,8 +56,6 @@ def main() -> None:
         return base_wav
 
     def gen(batches):
-        import pandas as pd
-
         for pdf in batches:
             ids = pdf["id"].tolist()
             yield pd.DataFrame(
@@ -83,7 +68,7 @@ def main() -> None:
     t0 = time.time()
     assets = (
         spark.range(n)
-        .repartition(4 * args.cpus)
+        .repartition(4 * cpus)
         .mapInPandas(gen, schema="media_ref string, content binary")
         .persist()
     )
@@ -105,30 +90,14 @@ def main() -> None:
         F.sum((tagged & (F.col("language") == "ja")).cast("long")).alias("ja"),
     ).first()
     tag_wall = round(time.time() - t0, 2)
+    assets.unpersist()
 
     exp_ja = sum(1 for a in range(n) if a % 4 != 3 and a % 5 == 1)
     assert agg["rows"] == n and agg["errs"] == 0, agg
     assert agg["phantom"] == 0 and agg["bad_title"] == 0 and agg["lost"] == 0, agg
     assert agg["ja"] == exp_ja, (agg["ja"], exp_ja)
-
-    rec = {
-        "bench": "audio_tags",
-        "n_assets": n,
-        "cpus": args.cpus,
+    return {
         "synth_wall_s": synth_wall,
         "tag_wall_s": tag_wall,
         "assets_per_sec": round(n / tag_wall),
-        "ts": int(time.time()),
     }
-    print(
-        f"synth {synth_wall:7.2f} s   tags {tag_wall:7.2f} s "
-        f"({rec['assets_per_sec']:,} assets/s)"
-    )
-    with open(HIST, "a") as f:
-        f.write(json.dumps(rec) + "\n")
-    assets.unpersist()
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

@@ -24,22 +24,14 @@ or below 1/4096, under the VAD's -60 dBFS absolute floor, so the planted
 activity pattern survives companding and segment boundaries stay exact on
 every encoding.
 
-Run: python scripts/bench_audio_vad.py [--assets 200000] [--cpus 32]
-Appends one JSON line to BENCH/audio_vad_history.jsonl.
+Run: python bench.py --suite audio_vad [--scale 200000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-HIST = os.path.join(REPO, "BENCH", "audio_vad_history.jsonl")
+SCALE = 200_000
 
 SR = 8000
 FRAME_MS = 25
@@ -86,19 +78,13 @@ def synth_vad_wav(aid: int) -> bytes:
     return wav_encode(x, SR, fmt=FMTS[aid % 3])
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--assets", type=int, default=200_000)
-    ap.add_argument("--cpus", type=int, default=32)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from pyspark.sql import functions as F
 
     from ocr_spark.operators.multimodal import audio_segments
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_audio_vad", cpus=args.cpus)
-    n = args.assets
+    spark = get_spark("bench_audio_vad", cpus=cpus)
 
     def gen(batches):
         import pandas as pd
@@ -115,7 +101,7 @@ def main() -> None:
     t0 = time.time()
     assets = (
         spark.range(n)
-        .repartition(4 * args.cpus)
+        .repartition(4 * cpus)
         .mapInPandas(gen, schema="media_ref string, content binary")
         .persist()
     )
@@ -168,30 +154,12 @@ def main() -> None:
         exp_speech_sec,
     )
     segs.unpersist()
-
-    rec = {
-        "bench": "audio_vad",
-        "n_assets": n,
-        "cpus": args.cpus,
+    assets.unpersist()
+    return {
         "audio_hours": round(audio_sec / 3600, 2),
         "segment_rows": exp_rows,
         "synth_wall_s": synth_wall,
         "vad_wall_s": vad_wall,
         "assets_per_sec": round(n / vad_wall),
         "audio_sec_per_sec": round(audio_sec / vad_wall),
-        "ts": int(time.time()),
     }
-    print(
-        f"synth {synth_wall:7.2f} s   vad {vad_wall:7.2f} s   "
-        f"{rec['assets_per_sec']:,} assets/s   "
-        f"{rec['audio_sec_per_sec']:,}x realtime "
-        f"({rec['audio_hours']} h of audio)"
-    )
-    with open(HIST, "a") as f:
-        f.write(json.dumps(rec) + "\n")
-    assets.unpersist()
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

@@ -11,31 +11,19 @@ so the word-count table has a known shape: the template vocabulary is the
 closed-form set {(3p + 2i) mod 500 : p<37, 1<=i<=40} and its counts sum to
 exactly 40 tokens per template doc (36,000,000 at n=1M).
 
-Run: python scripts/bench_bpe_train.py [--docs 1000000]
-Appends one JSON line to BENCH/bpe_train_history.jsonl.
+Run: python bench.py --suite bpe_train [--scale 1000000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+SCALE = 1_000_000
+MERGES = 256
+TOP_WORDS = 50_000
 
-HIST = os.path.join(REPO, "BENCH", "bpe_train_history.jsonl")
 
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--docs", type=int, default=1_000_000)
-    ap.add_argument("--merges", type=int, default=256)
-    ap.add_argument("--top-words", type=int, default=50_000)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from pyspark.sql import functions as F
 
     from ocr_spark.functions.bpe import (
@@ -45,8 +33,9 @@ def main() -> None:
     )
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_bpe_train", cpus=32)
-    n = args.docs
+    # all 37 phases appear among non-multiple-of-10 ids for any n >= ~400
+    assert n >= 1000, "closed-form assertions assume n >= 1000"
+    spark = get_spark("bench_bpe_train", cpus=cpus)
 
     def spell(num_col):
         return F.translate(
@@ -87,15 +76,13 @@ def main() -> None:
     ).persist()
     docs.count()
 
-    results = {"n_docs": n, "n_merges": args.merges, "top_words": args.top_words}
+    results = {"n_merges": MERGES, "top_words": TOP_WORDS}
 
     t0 = time.time()
-    counts = corpus_word_counts(docs, top_words=args.top_words)
+    counts = corpus_word_counts(docs, top_words=TOP_WORDS)
     count_wall = round(time.time() - t0, 2)
     tpl = {w: c for w, c in counts.items() if w.startswith("w")}
     n_tpl_docs = n - (n + 9) // 10
-    # all 37 phases appear among non-multiple-of-10 ids for any n >= ~400
-    assert n >= 1000, "closed-form assertions assume n >= 1000"
     expected_vocab = {
         (3 * p + 2 * i) % 500 for p in range(37) for i in range(1, 41)
     }
@@ -106,17 +93,12 @@ def main() -> None:
         "docs_per_sec": round(n / count_wall),
         "vocab": len(counts),
     }
-    print(
-        f"counts {count_wall:8.2f} s  {round(n/count_wall):>9,} docs/s  "
-        f"vocab={len(counts):,}"
-    )
 
     t0 = time.time()
-    merges = bpe_train_from_counts(counts, n_merges=args.merges)
+    merges = bpe_train_from_counts(counts, n_merges=MERGES)
     train_wall = round(time.time() - t0, 2)
-    assert len(merges) == args.merges, len(merges)
+    assert len(merges) == MERGES, len(merges)
     results["merge_loop"] = {"wall_s": train_wall}
-    print(f"merges {train_wall:8.2f} s  (driver loop over {len(counts):,} words)")
 
     t0 = time.time()
     counted = token_counts_bpe(docs, merges=merges)
@@ -131,18 +113,5 @@ def main() -> None:
         "docs_per_sec": round(n / tok_wall),
         "total_tokens": agg["tok"],
     }
-    print(
-        f"count  {tok_wall:8.2f} s  {round(n/tok_wall):>9,} docs/s  "
-        f"tokens={agg['tok']:,}"
-    )
     docs.unpersist()
-
-    results["ts"] = int(time.time())
-    os.makedirs(os.path.dirname(HIST), exist_ok=True)
-    with open(HIST, "a") as f:
-        f.write(json.dumps(results) + "\n")
-    print("appended to", HIST)
-
-
-if __name__ == "__main__":
-    main()
+    return results

@@ -9,22 +9,29 @@ enter the cluster stage — only the near-dup SUBGRAPH is processed).
 Configs:
   * groups of 4, chain-wired  (diameter 3  — typical LSH cluster)
   * groups of 16, chain+skip  (diameter ~8 — stress the fixpoint loop)
+  * groups of 64, chain-wired (diameter 63 — star vs label propagation)
 
-Usage: python scripts/bench_clusters.py [--n 1000000] [--dup-frac 0.2]
-Appends JSON lines to BENCH/cluster_history.jsonl and prints them.
+The exact cluster-count asserts need DUP_FRAC * n to be a multiple of 64.
+
+Run: python bench.py --suite clusters [--scale 1000000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import warnings
 
 from pyspark.sql import functions as F
+
+SCALE = 1_000_000
+DUP_FRAC = 0.2
+CONFIGS = (
+    ("groups4_chain", 4, False, ("label",), 30),
+    ("groups16_chain_skip", 16, True, ("label",), 30),
+    # adversarial diameter: 64-long chains — label propagation needs 63
+    # rounds (capped here to keep the bench bounded); star needs ~log2
+    ("groups64_chain", 64, False, ("star", "label"), 16),
+)
 
 
 def chain_pairs(spark, n_dup: int, group: int):
@@ -45,27 +52,14 @@ def skip_pairs(spark, n_dup: int, group: int, skip: int):
     )
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--n", type=int, default=1_000_000)
-    ap.add_argument("--dup-frac", type=float, default=0.2)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from ocr_spark.operators.dedup import dedup_clusters
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_clusters", cpus=args.cpus)
-    n_dup = int(args.n * args.dup_frac)
+    spark = get_spark("bench_clusters", cpus=cpus)
+    n_dup = int(n * DUP_FRAC)
     results = []
-    configs = (
-        ("groups4_chain", 4, False, ("label",), 30),
-        ("groups16_chain_skip", 16, True, ("label",), 30),
-        # adversarial diameter: 64-long chains — label propagation needs 63
-        # rounds (capped here to keep the bench bounded); star needs ~log2
-        ("groups64_chain", 64, False, ("star", "label"), 16),
-    )
-    for name, group, with_skip, algorithms, max_rounds in configs:
+    for name, group, with_skip, algorithms, max_rounds in CONFIGS:
         pairs = chain_pairs(spark, n_dup, group)
         if with_skip:
             pairs = pairs.unionByName(skip_pairs(spark, n_dup, group, 2))
@@ -75,8 +69,6 @@ def main() -> None:
         for algorithm in algorithms:
             stats: dict = {}
             t0 = time.perf_counter()
-            import warnings
-
             with warnings.catch_warnings():
                 warnings.simplefilter("ignore", RuntimeWarning)
                 labels = dedup_clusters(
@@ -89,10 +81,8 @@ def main() -> None:
                 ).collect()[0]
             wall = round(time.perf_counter() - t0, 2)
             rec = {
-                "op": "dedup_clusters",
                 "config": name,
                 "algorithm": algorithm,
-                "n_docs_corpus": args.n,
                 "n_pairs": n_pairs,
                 "n_nodes": int(agg["n_nodes"]),
                 "n_clusters": int(agg["n_clusters"]),
@@ -106,19 +96,4 @@ def main() -> None:
                 assert rec["n_dropped"] == n_dup - expected_clusters
             results.append(rec)
         pairs.unpersist()
-
-    hist = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BENCH",
-        "cluster_history.jsonl",
-    )
-    ts = int(time.time())
-    with open(hist, "a") as f:
-        for r in results:
-            f.write(json.dumps({**r, "ts": ts, "cpus": args.cpus}) + "\n")
-    for r in results:
-        print(json.dumps(r))
-
-
-if __name__ == "__main__":
-    main()
+    return {"configs": results}

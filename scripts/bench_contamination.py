@@ -11,21 +11,27 @@ Shape under test: corpus → 8-byte 13-gram hashes (explode + distinct) →
 equi-join against the FORCE-BROADCAST eval hashes (the corpus never
 shuffles for the join) → one groupBy(doc_id).
 
-Usage: python scripts/bench_contamination.py [--n 1000000] [--ngram 13]
-Appends a JSON line to BENCH/contamination_history.jsonl and prints it.
+Run: python bench.py --suite contamination [--scale 1000000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from pyspark.sql import functions as F
+
+SCALE = 1_000_000
+NGRAM = 13
+EVAL_MOD = 1000
+# exact = broadcast eval hash set; bloom = broadcast bitmap prefilter +
+# exact verify (the big-eval regime, e.g. EVAL_MOD = 10)
+METHOD = "exact"
+# mod: eval = id % EVAL_MOD == 0 (every 100-id block overlaps -> prefilters
+# can prune nothing); blocks: eval = even ids of every EVAL_MOD-th block
+# (eval is n/(2*EVAL_MOD) docs but only 1/EVAL_MOD of blocks overlap -> the
+# realistic big-eval shape where a prefilter kills most corpus shingles
+# map-side)
+EVAL_SPLIT = "mod"
 
 
 def synth_docs(spark, n: int, words_per_doc: int = 48):
@@ -40,74 +46,37 @@ def synth_docs(spark, n: int, words_per_doc: int = 48):
     return spark.range(n).select(F.col("id").alias("doc_id"), text.alias("text"))
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--n", type=int, default=1_000_000)
-    ap.add_argument("--ngram", type=int, default=13)
-    ap.add_argument("--eval-mod", type=int, default=1000)
-    ap.add_argument(
-        "--method",
-        choices=("exact", "bloom"),
-        default="exact",
-        help="exact = broadcast eval hash set; bloom = broadcast bitmap "
-        "prefilter + exact verify (the big-eval regime, e.g. --eval-mod 10)",
-    )
-    ap.add_argument(
-        "--eval-split",
-        choices=("mod", "blocks"),
-        default="mod",
-        help="mod: eval = id %% eval_mod == 0 (every 100-id block overlaps "
-        "-> prefilters can prune nothing); blocks: eval = even ids of every "
-        "eval_mod-th block (eval is n/(2*eval_mod) docs but only 1/eval_mod "
-        "of blocks overlap -> the realistic big-eval shape where a "
-        "prefilter kills most corpus shingles map-side)",
-    )
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from ocr_spark.operators.dedup import contamination, contamination_bloom
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_contamination", cpus=args.cpus)
-    docs = synth_docs(spark, args.n)
-    if args.eval_split == "mod":
-        is_eval = F.col("doc_id") % args.eval_mod == 0
+    spark = get_spark("bench_contamination", cpus=cpus)
+    docs = synth_docs(spark, n)
+    if EVAL_SPLIT == "mod":
+        is_eval = F.col("doc_id") % EVAL_MOD == 0
     else:
-        is_eval = ((F.col("doc_id") / 100).cast("long") % args.eval_mod == 0) & (
+        is_eval = ((F.col("doc_id") / 100).cast("long") % EVAL_MOD == 0) & (
             F.col("doc_id") % 2 == 0
         )
     eval_docs = docs.where(is_eval)
     corpus = docs.where(~is_eval)
 
-    op = contamination if args.method == "exact" else contamination_bloom
+    op = contamination if METHOD == "exact" else contamination_bloom
     t0 = time.perf_counter()
-    hits = op(corpus, eval_docs, n=args.ngram)
+    hits = op(corpus, eval_docs, n=NGRAM)
     agg = hits.agg(
         F.count("*").alias("n_contaminated_docs"),
         F.sum("n_shared_shingles").alias("total_shared"),
         F.max("n_eval_docs").alias("max_eval_docs"),
     ).collect()[0]
     wall = round(time.perf_counter() - t0, 2)
-
-    rec = {
-        "op": f"contamination[{args.method}]",
-        "ngram": args.ngram,
-        "n_corpus_docs": args.n,
-        "n_eval_docs": args.n // args.eval_mod,
+    return {
+        "method": METHOD,
+        "eval_split": EVAL_SPLIT,
+        "ngram": NGRAM,
+        "n_eval_docs": n // EVAL_MOD,
         "n_contaminated_docs": int(agg["n_contaminated_docs"]),
         "total_shared_shingles": int(agg["total_shared"] or 0),
         "wall_sec": wall,
-        "docs_per_sec": round(args.n / wall, 1),
+        "docs_per_sec": round(n / wall, 1),
     }
-    hist = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BENCH",
-        "contamination_history.jsonl",
-    )
-    with open(hist, "a") as f:
-        f.write(json.dumps({**rec, "ts": int(time.time()), "cpus": args.cpus}) + "\n")
-    print(json.dumps(rec))
-
-
-if __name__ == "__main__":
-    main()

@@ -1,32 +1,20 @@
 """Scale evidence for the round-5 crawl-permission/packing operators:
 robots_filter, url_normalize_idn, quality_classifier, pack_sequences at
-1M synthetic docs on local[32], with exactness assertions (same contract
-as bench_neardup/bench_clusters). Appends one JSON line per operator to
-BENCH/crawl_ops_history.jsonl.
+1M synthetic docs, with exactness assertions (same contract as
+bench_neardup/bench_clusters); one timing per operator.
 
-Run: python scripts/bench_crawl_ops.py [--docs 1000000]
+Run: python bench.py --suite crawl_ops [--scale 1000000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-HIST = os.path.join(REPO, "BENCH", "crawl_ops_history.jsonl")
+SCALE = 1_000_000
+HOSTS = 10_000
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--docs", type=int, default=1_000_000)
-    ap.add_argument("--hosts", type=int, default=10_000)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from pyspark.sql import functions as F
 
     from ocr_spark.functions.idn import normalize_urls_idn
@@ -35,16 +23,15 @@ def main() -> None:
     from ocr_spark.operators.text_analysis import quality_classifier
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_crawl_ops", cpus=32)
-    n, H = args.docs, args.hosts
+    spark = get_spark("bench_crawl_ops", cpus=cpus)
 
-    # synthetic corpus: url over H hosts (1% IDN), ~60-token text
+    # synthetic corpus: url over HOSTS hosts (1% IDN), ~60-token text
     docs = spark.range(n).select(
         F.col("id").alias("doc_id"),
         F.concat(
             F.lit("http://"),
             F.when(F.col("id") % 100 == 0, F.lit("bücher")).otherwise(
-                F.concat(F.lit("h"), (F.col("id") % H).cast("string"))
+                F.concat(F.lit("h"), (F.col("id") % HOSTS).cast("string"))
             ),
             F.lit(".example/"),
             F.when(F.col("id") % 7 == 0, F.lit("private/")).otherwise(F.lit("p/")),
@@ -63,14 +50,13 @@ def main() -> None:
     ).persist()
     docs.count()
 
-    results = {}
+    results = {"hosts": HOSTS}
 
     def bench(name: str, fn):
         t0 = time.time()
         got = fn()
         wall = round(time.time() - t0, 2)
         results[name] = {"wall_s": wall, "docs_per_sec": round(n / wall), **got}
-        print(f"{name:22s} {wall:8.2f} s  {round(n / wall):>9,} docs/s  {got}")
 
     # 1) URL canonicalization incl. IDN sparse path (1% non-ASCII hosts).
     # Raw-attribute gate so the url_normalize tree evaluates ~once per
@@ -85,8 +71,8 @@ def main() -> None:
 
     bench("normalize_urls_idn", run_urls)
 
-    # 2) robots permission gate: H-host broadcast table, 1/7 disallowed
-    robots_tab = spark.range(H).select(
+    # 2) robots permission gate: HOSTS-host broadcast table, 1/7 disallowed
+    robots_tab = spark.range(HOSTS).select(
         F.concat(F.lit("h"), F.col("id").cast("string"), F.lit(".example")).alias(
             "host"
         ),
@@ -123,19 +109,5 @@ def main() -> None:
         return {"n_seqs": st["n_seqs"], "mean_fill": float(st["mean_fill"])}
 
     bench("pack_sequences", run_pack)
-
-    rec = {
-        "ts": int(time.time()),
-        "docs": n,
-        "hosts": H,
-        "cpus": 32,
-        "results": results,
-    }
-    os.makedirs(os.path.dirname(HIST), exist_ok=True)
-    with open(HIST, "a") as f:
-        f.write(json.dumps(rec) + "\n")
-    print("recorded ->", HIST)
-
-
-if __name__ == "__main__":
-    main()
+    docs.unpersist()
+    return results

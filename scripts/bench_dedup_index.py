@@ -16,23 +16,20 @@ Correctness at scale is asserted two ways:
   * closed-form with a small tolerance for LSH band misses (J≈0.91
     variants miss a band with p≈7.6e-5): kept ≈ 0.7·n_batch.
 
-Usage: python scripts/bench_dedup_index.py [--n 500000] [--words 24]
-Appends a JSON line to BENCH/dedup_index_history.jsonl and prints it.
+Run: python bench.py --suite dedup_index [--scale 500000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
 import shutil
-import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from pyspark.sql import functions as F
+
+SCALE = 500_000
+WORDS = 24
 
 
 def synth_corpus(spark, n: int, words: int):
@@ -74,15 +71,7 @@ def synth_batch(spark, n_corpus: int, n_batch: int, words: int):
     )
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--n", type=int, default=500_000)
-    ap.add_argument("--words", type=int, default=24)
-    ap.add_argument(
-        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", 32))
-    )
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from ocr_spark.session import get_spark
     from ocr_spark.operators.dedup import near_dedup
     from ocr_spark.operators.dedup_index import (
@@ -91,12 +80,10 @@ def main() -> None:
         write_dedup_index,
     )
 
-    spark = get_spark(
-        "bench_dedup_index", cpus=args.cpus, shuffle_partitions=args.cpus
-    )
-    n, n_batch = args.n, args.n // 10
-    corpus = synth_corpus(spark, n, args.words)
-    batch = synth_batch(spark, n, n_batch, args.words)
+    spark = get_spark("bench_dedup_index", cpus=cpus, shuffle_partitions=cpus)
+    n_batch = n // 10
+    corpus = synth_corpus(spark, n, WORDS)
+    batch = synth_batch(spark, n, n_batch, WORDS)
     tmp = tempfile.mkdtemp(prefix="dedup_index_bench_")
     path = os.path.join(tmp, "idx")
     try:
@@ -141,9 +128,7 @@ def main() -> None:
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
-    row = {
-        "metric": "dedup_index_incremental",
-        "n_corpus": n,
+    return {
         "n_batch": n_batch,
         "kept": n_kept,
         "build_sec": round(t_build, 3),
@@ -151,14 +136,4 @@ def main() -> None:
         "oneshot_union_sec": round(t_full, 3),
         "speedup_vs_oneshot": round(t_full / t_inc, 2),
         "batch_docs_per_sec": round(n_batch / t_inc, 1),
-        "cpus": args.cpus,
-        "ts": int(time.time()),
     }
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/dedup_index_history.jsonl", "a") as f:
-        f.write(json.dumps(row) + "\n")
-    print(json.dumps(row))
-
-
-if __name__ == "__main__":
-    main()

@@ -12,32 +12,19 @@ Exactness is closed-form:
   * DOCX/EPUB/ODT titles equal "T{did}" row-wise (RTF/LaTeX fixtures
     carry none / \title-derived respectively, asserted separately).
 
-Run: python scripts/bench_doc_formats.py [--docs 200000] [--cpus 32]
-Appends one JSON line to BENCH/doc_formats_history.jsonl.
+Run: python bench.py --suite doc_formats [--scale 200000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-HIST = os.path.join(REPO, "BENCH", "doc_formats_history.jsonl")
+SCALE = 200_000
 
 FORMATS = ["docx", "epub", "odt", "rtf", "tex", "xlsx", "pptx"]
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--docs", type=int, default=200_000)
-    ap.add_argument("--cpus", type=int, default=32)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from pyspark.sql import functions as F
 
     from ocr_spark.operators.doc_formats import (
@@ -51,8 +38,7 @@ def main() -> None:
     )
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_doc_formats", cpus=args.cpus)
-    n = args.docs
+    spark = get_spark("bench_doc_formats", cpus=cpus)
 
     def payload(did: int) -> bytes:
         sent = f"payload {did} sentinel"
@@ -106,7 +92,7 @@ def main() -> None:
     t0 = time.time()
     assets = (
         spark.range(n)
-        .repartition(4 * args.cpus)
+        .repartition(4 * cpus)
         .mapInPandas(gen, schema="media_ref string, content binary")
         .persist()
     )
@@ -130,29 +116,13 @@ def main() -> None:
         F.sum("n_chars").alias("chars"),
     ).first()
     extract_wall = round(time.time() - t0, 2)
+    assets.unpersist()
 
     assert agg["rows"] == n and agg["errs"] == 0, agg
     assert agg["bad_fmt"] == 0 and agg["lost"] == 0 and agg["bad_title"] == 0, agg
-
-    rec = {
-        "bench": "doc_formats",
-        "n_docs": n,
-        "cpus": args.cpus,
+    return {
         "synth_wall_s": synth_wall,
         "extract_wall_s": extract_wall,
         "docs_per_sec": round(n / extract_wall),
         "total_chars": int(agg["chars"]),
-        "ts": int(time.time()),
     }
-    print(
-        f"synth {synth_wall:7.2f} s   extract {extract_wall:7.2f} s "
-        f"({rec['docs_per_sec']:,} docs/s)"
-    )
-    with open(HIST, "a") as f:
-        f.write(json.dumps(rec) + "\n")
-    assets.unpersist()
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

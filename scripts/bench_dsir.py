@@ -12,39 +12,26 @@ the resampled set has a known planted composition: the importance-weight
 separation (~59 grams × several nats) dwarfs the Gumbel noise (≤ ~37
 micro-million), so ≥ 99% of the selected docs must be target-like.
 
-Run: python scripts/bench_dsir.py [--docs 1000000] [--k-frac 0.1]
-Appends one JSON line to BENCH/dsir_history.jsonl.
+Run: python bench.py --suite dsir [--scale 1000000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+SCALE = 1_000_000
+TARGET_DOCS = 10_000
+K_FRAC = 0.1
+DIM = 8192
 
-HIST = os.path.join(REPO, "BENCH", "dsir_history.jsonl")
 
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--docs", type=int, default=1_000_000)
-    ap.add_argument("--target-docs", type=int, default=10_000)
-    ap.add_argument("--k-frac", type=float, default=0.1)
-    ap.add_argument("--dim", type=int, default=8192)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from pyspark.sql import functions as F
 
     from ocr_spark.operators.dsir import dsir_fit, dsir_resample, dsir_weights
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_dsir", cpus=32)
-    n = args.docs
+    spark = get_spark("bench_dsir", cpus=cpus)
 
     def spell(num_col):
         return F.translate(num_col.cast("string"), "0123456789", "abcdefghij")
@@ -78,27 +65,23 @@ def main() -> None:
         .persist()
     )
     raw.count()
-    target = spark.range(args.target_docs).select(
+    target = spark.range(TARGET_DOCS).select(
         F.concat(F.lit("T"), F.col("id").cast("string")).alias("doc_id"),
         words("t", tgt_formula).alias("text"),
     )
 
-    results = {"n_docs": n, "target_docs": args.target_docs, "dim": args.dim}
+    results = {"target_docs": TARGET_DOCS, "dim": DIM}
 
     t0 = time.time()
-    model = dsir_fit(target, raw, dim=args.dim)
+    model = dsir_fit(target, raw, dim=DIM)
     fit_wall = round(time.time() - t0, 2)
     assert model["r_total"] == 59 * n, model["r_total"]  # closed form
-    assert model["t_total"] == 59 * args.target_docs, model["t_total"]
+    assert model["t_total"] == 59 * TARGET_DOCS, model["t_total"]
     results["fit"] = {
         "wall_s": fit_wall,
-        "docs_per_sec": round((n + args.target_docs) / fit_wall),
+        "docs_per_sec": round((n + TARGET_DOCS) / fit_wall),
         "buckets": len(model["buckets"]),
     }
-    print(
-        f"fit    {fit_wall:8.2f} s  {results['fit']['docs_per_sec']:>9,} docs/s"
-        f"  buckets={len(model['buckets']):,}"
-    )
 
     t0 = time.time()
     wt = dsir_weights(raw, model).persist()
@@ -114,12 +97,8 @@ def main() -> None:
     assert agg["grams"] == 59 * n, agg["grams"]  # 30 uni + 29 bi per doc
     assert agg["gramless"] == 0
     results["weights"] = {"wall_s": w_wall, "docs_per_sec": round(n / w_wall)}
-    print(
-        f"score  {w_wall:8.2f} s  {results['weights']['docs_per_sec']:>9,}"
-        " docs/s"
-    )
 
-    k = round(n * args.k_frac)
+    k = round(n * K_FRAC)
     t0 = time.time()
     picked = dsir_resample(wt, k=k, seed="bench").select("doc_id")
     n_good = picked.where(F.col("doc_id").startswith("g")).count()
@@ -132,18 +111,6 @@ def main() -> None:
         "target_like_frac": round(frac, 5),
         "docs_per_sec": round(n / r_wall),
     }
-    print(
-        f"topk   {r_wall:8.2f} s  k={k:,}  target-like frac={frac:.4f}"
-    )
     wt.unpersist()
     raw.unpersist()
-
-    results["ts"] = int(time.time())
-    os.makedirs(os.path.dirname(HIST), exist_ok=True)
-    with open(HIST, "a") as f:
-        f.write(json.dumps(results) + "\n")
-    print("appended to", HIST)
-
-
-if __name__ == "__main__":
-    main()
+    return results

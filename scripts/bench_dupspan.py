@@ -10,21 +10,17 @@ Shape under test: gram+position explode (codegen) -> ONE partial-agg
 shuffle of 8-byte gram keys -> broadcast dup set -> narrow covered-position
 re-agg -> patch join with the in-row indexed-lambda filter.
 
-Usage: python scripts/bench_dupspan.py [--n 500000] [--ngram 13]
-Appends a JSON line to BENCH/dupspan_history.jsonl and prints it.
+Run: python bench.py --suite dupspan [--scale 500000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from pyspark.sql import functions as F
+
+SCALE = 500_000
+NGRAM = 13
 
 
 def synth_docs(spark, n: int, shared_words: int = 24, unique_words: int = 24):
@@ -43,21 +39,15 @@ def synth_docs(spark, n: int, shared_words: int = 24, unique_words: int = 24):
     return spark.range(n).select(F.col("id").alias("doc_id"), text.alias("text"))
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--n", type=int, default=500_000)
-    ap.add_argument("--ngram", type=int, default=13)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from ocr_spark.operators.corpus_clean import dup_span_removal
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_dupspan", cpus=args.cpus)
-    docs = synth_docs(spark, args.n)
+    spark = get_spark("bench_dupspan", cpus=cpus)
+    docs = synth_docs(spark, n)
 
     t0 = time.perf_counter()
-    out = dup_span_removal(docs, n=args.ngram, min_count=2)
+    out = dup_span_removal(docs, n=NGRAM, min_count=2)
     agg = out.agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").alias("tokens"),
@@ -65,25 +55,10 @@ def main() -> None:
         F.sum((F.col("n_removed") > 0).cast("long")).alias("affected"),
     ).collect()[0]
     wall = round(time.perf_counter() - t0, 2)
-
-    rec = {
-        "op": "dup_span_removal",
-        "ngram": args.ngram,
-        "n_docs": args.n,
+    return {
+        "ngram": NGRAM,
         "affected_docs": int(agg["affected"]),
         "removed_fraction": round(agg["removed"] / agg["tokens"], 4),
         "wall_sec": wall,
-        "docs_per_sec": round(args.n / wall, 1),
+        "docs_per_sec": round(n / wall, 1),
     }
-    hist = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BENCH",
-        "dupspan_history.jsonl",
-    )
-    with open(hist, "a") as f:
-        f.write(json.dumps({**rec, "ts": int(time.time()), "cpus": args.cpus}) + "\n")
-    print(json.dumps(rec))
-
-
-if __name__ == "__main__":
-    main()

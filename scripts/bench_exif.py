@@ -13,22 +13,14 @@ Exactness is closed-form:
     output either byte-identical (plain) or exactly segment-shorter, and
     re-parsing a stripped payload yields the all-None dict.
 
-Run: python scripts/bench_exif.py [--assets 500000] [--cpus 32]
-Appends one JSON line to BENCH/exif_history.jsonl.
+Run: python bench.py --suite exif [--scale 500000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-HIST = os.path.join(REPO, "BENCH", "exif_history.jsonl")
+SCALE = 500_000
 
 
 def _gps(aid: int) -> tuple[float, float] | None:
@@ -44,12 +36,7 @@ def _orient(aid: int) -> int:
     return 1 + aid % 8
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--assets", type=int, default=500_000)
-    ap.add_argument("--cpus", type=int, default=32)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -57,8 +44,7 @@ def main() -> None:
     from ocr_spark.operators.image_codecs import jpeg_encode
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_exif", cpus=args.cpus)
-    n = args.assets
+    spark = get_spark("bench_exif", cpus=cpus)
 
     base = jpeg_encode(
         (np.arange(64 * 64).reshape(64, 64) % 256).astype(np.uint8), quality=85
@@ -90,7 +76,7 @@ def main() -> None:
     t0 = time.time()
     assets = (
         spark.range(n)
-        .repartition(4 * args.cpus)
+        .repartition(4 * cpus)
         .mapInPandas(gen, schema="media_ref string, content binary, aid long")
         .persist()
     )
@@ -138,34 +124,17 @@ def main() -> None:
         F.sum((F.length("content") != len(base)).cast("long")).alias("bad_len"),
     ).first()
     strip_wall = round(time.time() - t0, 2)
+    assets.unpersist()
     assert sagg["rows"] == n and sagg["errs"] == 0
     # every stripped payload collapses to the shared base body exactly
     assert sagg["bad_len"] == 0
     assert int(sagg["removed"]) == planted_meta_bytes
     assert sagg["had"] == (n + 1) // 2
-
-    rec = {
-        "bench": "exif",
-        "n_assets": n,
-        "cpus": args.cpus,
+    return {
         "meta_mb": round(planted_meta_bytes / 1e6, 1),
         "synth_wall_s": synth_wall,
         "parse_wall_s": parse_wall,
         "parse_assets_per_sec": round(n / parse_wall),
         "strip_wall_s": strip_wall,
         "strip_assets_per_sec": round(n / strip_wall),
-        "ts": int(time.time()),
     }
-    print(
-        f"synth {synth_wall:7.2f} s   parse {parse_wall:7.2f} s "
-        f"({rec['parse_assets_per_sec']:,}/s)   strip {strip_wall:7.2f} s "
-        f"({rec['strip_assets_per_sec']:,}/s)   meta {rec['meta_mb']} MB"
-    )
-    with open(HIST, "a") as f:
-        f.write(json.dumps(rec) + "\n")
-    assets.unpersist()
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

@@ -9,40 +9,26 @@ so the decoded mean intensity must equal 255*(w*h-npix)/(w*h) BIT-EXACTLY
 (integer sum then one float64 division on both sides) and (width, height)
 must match the did-derived dims — any decode drift on any row fails the run.
 
-Run: python scripts/bench_fax.py [--assets 100000] [--cpus 32]
-Appends one JSON line to BENCH/fax_history.jsonl.
+Run: python bench.py --suite fax [--scale 100000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-HIST = os.path.join(REPO, "BENCH", "fax_history.jsonl")
+SCALE = 100_000
 
 COMPS = ["g3", "g3_2d", "g4"]
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--assets", type=int, default=100_000)
-    ap.add_argument("--cpus", type=int, default=32)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     import numpy as np
     from pyspark.sql import functions as F
 
     from ocr_spark.operators.multimodal import image_features
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_fax", cpus=args.cpus)
-    n = args.assets
+    spark = get_spark("bench_fax", cpus=cpus)
 
     def page_bytes(did: int) -> bytes:
         from ocr_spark.operators.image_codecs import tiff_encode
@@ -69,7 +55,7 @@ def main() -> None:
     t0 = time.time()
     assets = (
         spark.range(n)
-        .repartition(4 * args.cpus)
+        .repartition(4 * cpus)
         .mapInPandas(
             gen, schema="media_ref string, media_type string, content binary"
         )
@@ -105,30 +91,13 @@ def main() -> None:
         ).alias("bad_mean"),
     ).first()
     decode_wall = round(time.time() - t0, 2)
+    assets.unpersist()
 
     assert agg["rows"] == n and agg["errs"] == 0, agg
     assert agg["bad_w"] == 0 and agg["bad_h"] == 0 and agg["bad_mean"] == 0, agg
-
-    rec = {
-        "bench": "fax",
-        "n_assets": n,
-        "cpus": args.cpus,
+    return {
         "synth_wall_s": synth_wall,
         "decode_wall_s": decode_wall,
         "assets_per_sec": round(n / decode_wall),
         "bytes_in": int(total_bytes),
-        "ts": int(time.time()),
     }
-    print(
-        f"synth {synth_wall:7.2f} s   decode+verify {decode_wall:7.2f} s "
-        f"({rec['assets_per_sec']:,} fax pages/s, "
-        f"{total_bytes / 1e6:.1f} MB compressed)"
-    )
-    with open(HIST, "a") as f:
-        f.write(json.dumps(rec) + "\n")
-    assets.unpersist()
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

@@ -1,43 +1,30 @@
 """Scale evidence for the HTML → Markdown extractor (html_markdown.py):
 render a synthetic crawl of structured pages (heading, nav boilerplate,
 paragraphs with emphasis + links, a nested list, a fenced code block, a
-pipe table, a blockquote) through html_markdown_df at local[32].
+pipe table, a blockquote) through html_markdown_df.
 
 Exactness assertions (bench contract): every page is the SAME 8-block
 template parameterized by doc id, so the output shape is closed-form —
 n_blocks == 8 for every doc, exactly 3 resolved links and 1 heading per
 doc, and the nav boilerplate never leaks into the markdown.
 
-Run: python scripts/bench_html_markdown.py [--docs 200000]
-Appends one JSON line to BENCH/html_markdown_history.jsonl.
+Run: python bench.py --suite html_markdown [--scale 200000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-HIST = os.path.join(REPO, "BENCH", "html_markdown_history.jsonl")
+SCALE = 200_000
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--docs", type=int, default=200_000)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from pyspark.sql import functions as F
 
     from ocr_spark.operators.html_markdown import html_markdown_df
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_html_markdown", cpus=32)
-    n = args.docs
+    spark = get_spark("bench_html_markdown", cpus=cpus)
 
     i = F.col("id").cast("string")
     html = F.concat(
@@ -96,23 +83,9 @@ def main() -> None:
     assert agg["boiler_leaks"] == 0, agg["boiler_leaks"]
     docs.unpersist()
 
-    results = {
-        "n_docs": n,
+    return {
         "avg_html_chars": round(avg_len, 1),
         "wall_s": wall,
         "docs_per_sec": round(n / wall),
         "md_chars_total": agg["chars"],
-        "ts": int(time.time()),
     }
-    print(
-        f"render {wall:8.2f} s  {results['docs_per_sec']:>9,} docs/s  "
-        f"({agg['chars']:,} md chars, 8 blocks + 3 links per doc exact)"
-    )
-    os.makedirs(os.path.dirname(HIST), exist_ok=True)
-    with open(HIST, "a") as f:
-        f.write(json.dumps(results) + "\n")
-    print("appended to", HIST)
-
-
-if __name__ == "__main__":
-    main()

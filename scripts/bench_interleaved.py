@@ -10,33 +10,21 @@ closed-form — per-doc ids are exactly 15 tokens (12 word + 2 sentinel +
 at budget 64, every sentinel's ref survives with its position pointing at
 a sentinel, and per-sequence token sums conserve exactly.
 
-Run: python scripts/bench_interleaved.py [--docs 500000]
-Appends one JSON line to BENCH/interleaved_history.jsonl.
+Run: python bench.py --suite interleaved [--scale 500000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-HIST = os.path.join(REPO, "BENCH", "interleaved_history.jsonl")
+SCALE = 500_000
+MAX_TOKENS = 64
+N_BUCKETS = 256
 
 MERGES = [("h", "e"), ("l", "l"), ("he", "ll"), ("hell", "o")]
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--docs", type=int, default=500_000)
-    ap.add_argument("--max-tokens", type=int, default=64)
-    ap.add_argument("--n-buckets", type=int, default=256)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from pyspark.sql import functions as F
 
     from ocr_spark.operators.corpus_clean import pack_sequences
@@ -47,8 +35,7 @@ def main() -> None:
     )
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_interleaved", cpus=32)
-    n = args.docs
+    spark = get_spark("bench_interleaved", cpus=cpus)
     i = F.col("id").cast("string")
 
     def text_span(off):
@@ -80,11 +67,7 @@ def main() -> None:
     docs.count()
 
     per_doc = 15  # 3 spans x 4 'hello' tokens + 2 sentinels + 1 sep
-    results = {
-        "n_docs": n,
-        "max_tokens": args.max_tokens,
-        "n_buckets": args.n_buckets,
-    }
+    results = {"max_tokens": MAX_TOKENS, "n_buckets": N_BUCKETS}
 
     t0 = time.time()
     enc = encode_interleaved(docs, merges=MERGES).persist()
@@ -98,17 +81,13 @@ def main() -> None:
     assert agg["ids"] == per_doc * n, agg["ids"]
     assert agg["media"] == 2 * n, agg["media"]
     results["encode"] = {"wall_s": e_wall, "docs_per_sec": round(n / e_wall)}
-    print(
-        f"encode {e_wall:8.2f} s  {results['encode']['docs_per_sec']:>9,}"
-        f" docs/s  ({agg['ids']:,} ids, {agg['media']:,} sentinels)"
-    )
 
     t0 = time.time()
     counts = enc.select("doc_id", F.size("input_ids").alias("_n"))
     packed = pack_sequences(
         counts,
-        max_tokens=args.max_tokens,
-        n_buckets=args.n_buckets,
+        max_tokens=MAX_TOKENS,
+        n_buckets=N_BUCKETS,
         tokens_col="_n",
     ).persist()
     n_seqs = packed.select("seq_id").distinct().count()
@@ -118,14 +97,10 @@ def main() -> None:
         "docs_per_sec": round(n / p_wall),
         "n_seqs": n_seqs,
     }
-    print(
-        f"pack   {p_wall:8.2f} s  {results['pack']['docs_per_sec']:>9,}"
-        f" docs/s  ({n_seqs:,} sequences)"
-    )
 
     t0 = time.time()
     seqs = interleaved_sequences_grouped(
-        enc, packed, args.max_tokens, n_buckets=args.n_buckets
+        enc, packed, MAX_TOKENS, n_buckets=N_BUCKETS
     )
     sagg = seqs.agg(
         F.count("*").alias("rows"),
@@ -167,20 +142,8 @@ def main() -> None:
         "docs_per_sec": round(n / f_wall),
         "seqs_per_sec": round(n_seqs / f_wall),
     }
-    print(
-        f"fill   {f_wall:8.2f} s  {results['fill']['docs_per_sec']:>9,}"
-        f" docs/s  (every sentinel kept + position-verified)"
-    )
     enc.unpersist()
     packed.unpersist()
     docs.unpersist()
 
-    results["ts"] = int(time.time())
-    os.makedirs(os.path.dirname(HIST), exist_ok=True)
-    with open(HIST, "a") as f:
-        f.write(json.dumps(results) + "\n")
-    print("appended to", HIST)
-
-
-if __name__ == "__main__":
-    main()
+    return results

@@ -12,21 +12,19 @@ Asserted invariants: every kept link row resolves to an http(s) URL,
 graph edge count and centrality node count match closed forms, frontier
 excludes the synthetic seen set exactly.
 
-Usage: python scripts/bench_links.py [--n 200000] [--fanout 5]
-Appends a JSON line to BENCH/links_history.jsonl and prints it.
+Run: python bench.py --suite links [--scale 200000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from pyspark.sql import functions as F
+
+SCALE = 200_000
+FANOUT = 5
+ITERS = 8
+POOL = 997  # domain pool size per side
 
 
 def synth_html_docs(spark, n: int, fanout: int, pool: int = 997):
@@ -72,17 +70,7 @@ def synth_html_docs(spark, n: int, fanout: int, pool: int = 997):
     )
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--n", type=int, default=200_000)
-    ap.add_argument("--fanout", type=int, default=5)
-    ap.add_argument("--iters", type=int, default=8)
-    ap.add_argument("--pool", type=int, default=997, help="domain pool size per side")
-    ap.add_argument(
-        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", 32))
-    )
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from ocr_spark.session import get_spark
     from ocr_spark.operators.links import (
         domain_centrality,
@@ -91,8 +79,8 @@ def main() -> None:
     )
     from ocr_spark.operators.frontier import crawl_frontier
 
-    spark = get_spark("bench_links", cpus=args.cpus, shuffle_partitions=args.cpus)
-    docs = synth_html_docs(spark, args.n, args.fanout, pool=args.pool)
+    spark = get_spark("bench_links", cpus=cpus, shuffle_partitions=cpus)
+    docs = synth_html_docs(spark, n, FANOUT, pool=POOL)
 
     t0 = time.time()
     links = html_links_df(docs)
@@ -100,7 +88,7 @@ def main() -> None:
     n_links = links.count()
     t_parse = time.time() - t0
     # mailto + fragment dropped; nofollow rows retained (flagged)
-    assert n_links == args.n * args.fanout, (n_links, args.n * args.fanout)
+    assert n_links == n * FANOUT, (n_links, n * FANOUT)
 
     t0 = time.time()
     graph = domain_link_graph(links).persist()
@@ -108,12 +96,12 @@ def main() -> None:
     t_graph = time.time() - t0
 
     t0 = time.time()
-    ranks = domain_centrality(graph, iters=args.iters)
+    ranks = domain_centrality(graph, iters=ITERS)
     n_nodes = ranks.count()
     t_rank = time.time() - t0
-    assert n_nodes <= 2 * args.pool  # src + target domain pools
+    assert n_nodes <= 2 * POOL  # src + target domain pools
 
-    seen = links.select(F.col("href").alias("url")).limit(args.n // 2)
+    seen = links.select(F.col("href").alias("url")).limit(n // 2)
     t0 = time.time()
     frontier = crawl_frontier(links, seen_urls=seen)
     n_front = frontier.count()
@@ -123,28 +111,16 @@ def main() -> None:
     graph.unpersist()
     links.unpersist()
 
-    row = {
-        "metric": "links_family",
-        "n_docs": args.n,
+    return {
         "n_links": n_links,
         "n_edges": n_edges,
         "n_domains": n_nodes,
         "n_frontier": n_front,
         "parse_sec": round(t_parse, 3),
-        "parse_docs_per_sec": round(args.n / t_parse, 1),
+        "parse_docs_per_sec": round(n / t_parse, 1),
         "graph_sec": round(t_graph, 3),
         "rank_sec": round(t_rank, 3),
-        "rank_iters": args.iters,
-        "domain_pool": args.pool,
+        "rank_iters": ITERS,
+        "domain_pool": POOL,
         "frontier_sec": round(t_frontier, 3),
-        "cpus": args.cpus,
-        "ts": int(time.time()),
     }
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/links_history.jsonl", "a") as f:
-        f.write(json.dumps(row) + "\n")
-    print(json.dumps(row))
-
-
-if __name__ == "__main__":
-    main()

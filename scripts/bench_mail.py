@@ -17,39 +17,25 @@ Exactness is closed-form and row-wise:
 Scale shape: ONE Arrow-batched mapInPandas stage, zero Exchange — a
 100 TB mail corpus partitions by archive file and scales embarrassingly.
 
-Run: python scripts/bench_mail.py [--docs 200000] [--cpus 32]
-Appends one JSON line to BENCH/mail_history.jsonl.
+Run: python bench.py --suite mail [--scale 200000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-HIST = os.path.join(REPO, "BENCH", "mail_history.jsonl")
+SCALE = 200_000
 
 PER_BOX = 8
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--docs", type=int, default=200_000)
-    ap.add_argument("--cpus", type=int, default=32)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from pyspark.sql import functions as F
 
     from ocr_spark.session import get_spark
     from ocr_spark.sources.mail import mail_messages, synth_eml, synth_mbox
 
-    spark = get_spark("bench_mail", cpus=args.cpus)
-    n = args.docs
+    spark = get_spark("bench_mail", cpus=cpus)
     n_boxes = (n + PER_BOX - 1) // PER_BOX
 
     def message(did: int) -> bytes:
@@ -91,7 +77,7 @@ def main() -> None:
     t0 = time.time()
     docs = (
         spark.range(n_boxes)
-        .repartition(4 * args.cpus)
+        .repartition(4 * cpus)
         .mapInPandas(gen, schema="doc_id string, payload string")
         .persist()
     )
@@ -121,32 +107,16 @@ def main() -> None:
         F.sum(F.length("text")).alias("chars"),
     ).first()
     extract_wall = round(time.time() - t0, 2)
+    docs.unpersist()
 
     n_att_docs = sum(1 for d in range(n) if d % 4 == 3)
     assert agg["rows"] == n and agg["errs"] == 0, agg
     assert agg["bad_subj"] == 0 and agg["bad_body"] == 0, agg
     assert agg["atts"] == 2 * n_att_docs, (agg["atts"], 2 * n_att_docs)
-
-    rec = {
-        "bench": "mail",
-        "n_messages": n,
+    return {
         "n_archives": n_boxes,
-        "cpus": args.cpus,
         "synth_wall_s": synth_wall,
         "extract_wall_s": extract_wall,
         "messages_per_sec": round(n / extract_wall),
         "chars_out": int(agg["chars"]),
-        "ts": int(time.time()),
     }
-    print(
-        f"synth {synth_wall:7.2f} s   extract {extract_wall:7.2f} s "
-        f"({rec['messages_per_sec']:,} messages/s)"
-    )
-    with open(HIST, "a") as f:
-        f.write(json.dumps(rec) + "\n")
-    docs.unpersist()
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

@@ -9,32 +9,20 @@ Exactness assertions:
 - every materialized array is exactly max_tokens long;
 - shard manifest totals equal the sequence-level aggregates.
 
-Run: python scripts/bench_materialize.py [--docs 1000000]
-Appends one JSON line to BENCH/materialize_history.jsonl.
+Run: python bench.py --suite materialize [--scale 1000000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
 import shutil
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+SCALE = 1_000_000
+MAX_TOKENS = 2048
+SHARDS = 64
 
-HIST = os.path.join(REPO, "BENCH", "materialize_history.jsonl")
 
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--docs", type=int, default=1_000_000)
-    ap.add_argument("--max-tokens", type=int, default=2048)
-    ap.add_argument("--shards", type=int, default=64)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from pyspark.sql import functions as F
 
     from ocr_spark.functions.bpe import SEP_ID, encode_token_ids, load_merges
@@ -46,8 +34,7 @@ def main() -> None:
     )
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_materialize", cpus=32)
-    n = args.docs
+    spark = get_spark("bench_materialize", cpus=cpus)
 
     def spell(num_col):
         return F.translate(num_col.cast("string"), "0123456789", "abcdefghij")
@@ -85,7 +72,7 @@ def main() -> None:
     docs.count()
 
     merges = load_merges()
-    results = {"n_docs": n, "max_tokens": args.max_tokens}
+    results = {"max_tokens": MAX_TOKENS}
 
     # stage 1: encode (the Arrow stage, no shuffle)
     t0 = time.time()
@@ -102,19 +89,15 @@ def main() -> None:
         "docs_per_sec": round(n / enc_wall),
         "total_tokens": total_tokens,
     }
-    print(
-        f"encode {enc_wall:8.2f} s  {round(n/enc_wall):>9,} docs/s  "
-        f"tokens={total_tokens:,}"
-    )
 
     # stage 2+3: pack + grouped materialize + verify aggregate
     t0 = time.time()
     counts = ids.select("doc_id", F.size("input_ids").alias("_n"))
     packed = pack_sequences(
-        counts, max_tokens=args.max_tokens, n_buckets=64, tokens_col="_n"
+        counts, max_tokens=MAX_TOKENS, n_buckets=64, tokens_col="_n"
     )
     seqs = materialize_sequences_grouped(
-        ids, packed, args.max_tokens, n_buckets=64
+        ids, packed, MAX_TOKENS, n_buckets=64
     ).persist()
     agg = seqs.agg(
         F.count("*").alias("n_seqs"),
@@ -127,19 +110,15 @@ def main() -> None:
     mat_wall = round(time.time() - t0, 2)
     assert agg["n_docs"] == n, agg["n_docs"]
     assert agg["n_tokens"] == total_tokens, (agg["n_tokens"], total_tokens)
-    assert agg["min_len"] == agg["max_len"] == args.max_tokens
+    assert agg["min_len"] == agg["max_len"] == MAX_TOKENS
     assert agg["n_trunc"] == 0  # 40-token docs never exceed the budget
-    fill = total_tokens / (agg["n_seqs"] * args.max_tokens)
+    fill = total_tokens / (agg["n_seqs"] * MAX_TOKENS)
     results["materialize"] = {
         "wall_s": mat_wall,
         "docs_per_sec": round(n / mat_wall),
         "n_seqs": agg["n_seqs"],
         "mean_fill": round(fill, 4),
     }
-    print(
-        f"mater. {mat_wall:8.2f} s  {round(n/mat_wall):>9,} docs/s  "
-        f"seqs={agg['n_seqs']:,} fill={fill:.3f}"
-    )
     # the id payload is consumed once seqs is materialized — release it
     # before the write stage claims heap for its per-shard parquet buffers
     # (at 10M docs the cache is ~6 GB; run with SPARK_DRIVER_MEM sized for
@@ -150,7 +129,7 @@ def main() -> None:
     out = "/tmp/ocr_spark_bench/train_shards"
     shutil.rmtree(out, ignore_errors=True)
     t0 = time.time()
-    write_training_shards(seqs, out, n_shards=args.shards, seed=0)
+    write_training_shards(seqs, out, n_shards=SHARDS, seed=0)
     wr_wall = round(time.time() - t0, 2)
     man = read_shard_manifest(spark, out).agg(
         F.sum("n_seqs").alias("s"), F.sum("n_tokens").alias("t")
@@ -159,28 +138,15 @@ def main() -> None:
     results["shard_write"] = {
         "wall_s": wr_wall,
         "seqs_per_sec": round(agg["n_seqs"] / wr_wall),
-        "n_shards": args.shards,
+        "n_shards": SHARDS,
     }
-    print(
-        f"write  {wr_wall:8.2f} s  {round(agg['n_seqs']/wr_wall):>9,} seqs/s  "
-        f"shards={args.shards}"
-    )
 
     end_to_end = round(enc_wall + mat_wall + wr_wall, 2)
     results["end_to_end"] = {
         "wall_s": end_to_end,
         "docs_per_sec": round(n / end_to_end),
     }
-    print(f"total  {end_to_end:8.2f} s  {round(n/end_to_end):>9,} docs/s")
 
     seqs.unpersist()
     docs.unpersist()
-    results["ts"] = int(time.time())
-    os.makedirs(os.path.dirname(HIST), exist_ok=True)
-    with open(HIST, "a") as f:
-        f.write(json.dumps(results) + "\n")
-    print("appended to", HIST)
-
-
-if __name__ == "__main__":
-    main()
+    return results

@@ -14,21 +14,17 @@ counts are computed exactly from bucket occupancy (Σ n·(n−1)/2 — the join'
 output size, without materializing it), and the scale-safe variants also run
 the real verified join for wall time.
 
-Usage: python scripts/bench_neardup.py [--n 500000] [--cpus 32]
-Appends a JSON line per config to BENCH/neardup_history.jsonl and prints all.
+Run: python bench.py --suite neardup [--scale 500000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import warnings
 
 from pyspark.sql import functions as F
+
+SCALE = 500_000
 
 
 def synth_sigs(spark, n: int):
@@ -63,13 +59,7 @@ def pair_count_from_buckets(keyed, *cols) -> int:
     return int(row["pairs"] or 0)
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--n", type=int, default=500_000)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
-    args = ap.parse_args()
-    n = args.n
-
+def run(n: int, cpus: int) -> dict:
     from ocr_spark.operators.dedup import simhash_chunk_keys, simhash_near_pairs
     from ocr_spark.operators.similarity import (
         derived_n_planes,
@@ -79,15 +69,13 @@ def main() -> None:
     )
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_neardup", cpus=args.cpus)
+    spark = get_spark("bench_neardup", cpus=cpus)
     brute = n * (n - 1) // 2
     results = []
 
     # --- simhash pigeonhole chunks: scale-safe vs wide radius ----------------
     sig = synth_sigs(spark, n)
     for max_hamming, run_join in ((3, True), (6, False)):
-        import warnings
-
         with warnings.catch_warnings():
             warnings.simplefilter("ignore", RuntimeWarning)
             keyed = simhash_chunk_keys(sig, max_hamming=max_hamming)
@@ -102,7 +90,6 @@ def main() -> None:
         results.append(
             {
                 "op": "simhash_near_pairs",
-                "n_docs": n,
                 "max_hamming": max_hamming,
                 "chunks": max_hamming + 1,
                 "chunk_bits": 60 // (max_hamming + 1),
@@ -131,7 +118,6 @@ def main() -> None:
         results.append(
             {
                 "op": "embedding_near_dups",
-                "n_vectors": n,
                 "n_planes": n_planes,
                 "buckets": 1 << n_planes,
                 "brute_pairs": brute,
@@ -141,18 +127,4 @@ def main() -> None:
             }
         )
 
-    hist = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BENCH",
-        "neardup_history.jsonl",
-    )
-    ts = int(time.time())
-    with open(hist, "a") as f:
-        for r in results:
-            f.write(json.dumps({**r, "ts": ts, "cpus": args.cpus}) + "\n")
-    for r in results:
-        print(json.dumps(r))
-
-
-if __name__ == "__main__":
-    main()
+    return {"configs": results}

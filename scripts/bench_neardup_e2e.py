@@ -11,21 +11,17 @@ Words are md5-derived 8-char tokens seeded by (text_key, word index), so
 distinct groups get ~independent 60-bit signatures (cross-group hamming ≈ 30,
 far above the max_hamming=3 radius — no false merges at any n).
 
-Usage: python scripts/bench_neardup_e2e.py [--n 500000] [--words 24]
-Appends a JSON line to BENCH/neardup_history.jsonl and prints it.
+Run: python bench.py --suite neardup_e2e [--scale 500000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from pyspark.sql import functions as F
+
+SCALE = 500_000
+WORDS = 24
 
 
 def synth_docs(spark, n: int, words: int, group: int = 20, dup_span: int = 4):
@@ -48,22 +44,16 @@ def synth_docs(spark, n: int, words: int, group: int = 20, dup_span: int = 4):
     )
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--n", type=int, default=500_000)
-    ap.add_argument("--words", type=int, default=24)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from ocr_spark.operators.dedup import near_dedup
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_neardup_e2e", cpus=args.cpus)
-    docs = synth_docs(spark, args.n, args.words).persist()
+    spark = get_spark("bench_neardup_e2e", cpus=cpus)
+    docs = synth_docs(spark, n, WORDS).persist()
     docs.count()  # materialize the corpus outside the timed window
 
-    n_groups = args.n // 20
-    expected_kept = args.n - 3 * n_groups
+    n_groups = n // 20
+    expected_kept = n - 3 * n_groups
     stats: dict = {}
     t0 = time.perf_counter()
     kept = near_dedup(docs, method="simhash", max_hamming=3, stats=stats)
@@ -71,28 +61,14 @@ def main() -> None:
     wall = round(time.perf_counter() - t0, 2)
     docs.unpersist()
     rec = {
-        "op": "near_dedup_e2e",
         "method": "simhash",
-        "n_docs": args.n,
-        "words_per_doc": args.words,
+        "words_per_doc": WORDS,
         "n_kept": n_kept,
         "expected_kept": expected_kept,
         "cluster_algorithm": stats.get("algorithm"),
         "cluster_rounds": stats.get("rounds"),
         "wall_sec": wall,
-        "docs_per_sec": round(args.n / wall, 1),
-        "cpus": args.cpus,
+        "docs_per_sec": round(n / wall, 1),
     }
     assert n_kept == expected_kept, rec
-    hist = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BENCH",
-        "neardup_history.jsonl",
-    )
-    with open(hist, "a") as f:
-        f.write(json.dumps({**rec, "ts": int(time.time())}) + "\n")
-    print(json.dumps(rec))
-
-
-if __name__ == "__main__":
-    main()
+    return rec

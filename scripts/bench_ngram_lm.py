@@ -9,36 +9,23 @@ strictly higher (less surprising) than junk docs on average, every doc
 with tokens must emit exactly one row, and the token total is known in
 closed form.
 
-Run: python scripts/bench_ngram_lm.py [--docs 1000000]
-Appends one JSON line to BENCH/ngram_lm_history.jsonl.
+Run: python bench.py --suite ngram_lm [--scale 1000000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-HIST = os.path.join(REPO, "BENCH", "ngram_lm_history.jsonl")
+SCALE = 1_000_000
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--docs", type=int, default=1_000_000)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from pyspark.sql import functions as F
 
     from ocr_spark.operators.ngram_lm import ngram_perplexity, train_ngram_lm
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_ngram_lm", cpus=32)
-    n = args.docs
+    spark = get_spark("bench_ngram_lm", cpus=cpus)
 
     # 90% of docs: 40 tokens cycling a 500-word template vocabulary with a
     # doc-dependent phase (rich shared trigram structure); 10%: 40 unique
@@ -105,7 +92,6 @@ def main() -> None:
         "tri": sizes[2],
         "t_total": tot["t_total"],
     }
-    print(f"train  {train_wall:8.2f} s  {round(n/train_wall):>9,} docs/s  {results['train']}")
     assert tot["t_total"] == 40 * n, tot["t_total"]  # exact token total
 
     t0 = time.time()
@@ -120,7 +106,6 @@ def main() -> None:
         "docs_per_sec": round(n / score_wall),
         "rows": agg["rows"],
     }
-    print(f"score  {score_wall:8.2f} s  {round(n/score_wall):>9,} docs/s  {results['score']}")
     assert agg["rows"] == n, agg["rows"]  # every doc has tokens -> one row
     assert agg["tok"] == 40 * n, agg["tok"]
 
@@ -135,21 +120,7 @@ def main() -> None:
     results["separation_nats"] = round(
         (means[True] - means[False]) / 1e6, 2
     )
-    print("separation (nats):", results["separation_nats"])
     scored.unpersist()
     lm.unpersist()
-
-    rec = {
-        "ts": int(time.time()),
-        "docs": n,
-        "cpus": 32,
-        "results": results,
-    }
-    os.makedirs(os.path.dirname(HIST), exist_ok=True)
-    with open(HIST, "a") as f:
-        f.write(json.dumps(rec) + "\n")
-    print("recorded ->", HIST)
-
-
-if __name__ == "__main__":
-    main()
+    docs.unpersist()
+    return results

@@ -17,34 +17,21 @@ Exactness is closed-form and row-wise:
   * format arithmetic holds (img0 rotates the 9 codecs by did%9 ->
     jpeg|png, img1 is always Flate RGB -> png).
 
-Run: python scripts/bench_pdf_images.py [--docs 50000] [--cpus 32]
-Appends one JSON line to BENCH/pdf_images_history.jsonl.
+Run: python bench.py --suite pdf_images [--scale 50000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-HIST = os.path.join(REPO, "BENCH", "pdf_images_history.jsonl")
+SCALE = 50_000
 
 CODECS = ["jpeg", "flate", "flate_png", "bilevel", "ccitt", "jbig2", "jpx",
           "jpx_lossy", "jbig2_halftone"]
 ENC_VARIANTS = ["rc4-128", "aesv2", "aes-r5", "aesv3"]
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--docs", type=int, default=50_000)
-    ap.add_argument("--cpus", type=int, default=32)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -52,8 +39,7 @@ def main() -> None:
     from ocr_spark.operators.pdf_layout import pdf_write_images
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_pdf_images", cpus=args.cpus)
-    n = args.docs
+    spark = get_spark("bench_pdf_images", cpus=cpus)
 
     def payload(did: int) -> bytes:
         # deterministic per-doc sizes: img0 (w0,h0), img1 fixed-ish RGB
@@ -93,7 +79,7 @@ def main() -> None:
     t0 = time.time()
     docs = (
         spark.range(n)
-        .repartition(4 * args.cpus)
+        .repartition(4 * cpus)
         .mapInPandas(gen, schema="doc_id string, payload string")
         .persist()
     )
@@ -118,31 +104,15 @@ def main() -> None:
         F.sum(F.length("content")).alias("bytes_out"),
     ).first()
     extract_wall = round(time.time() - t0, 2)
+    docs.unpersist()
 
     assert agg["rows"] == 2 * n and agg["errs"] == 0, agg
     assert agg["bad_w"] == 0 and agg["bad_h"] == 0 and agg["bad_fmt"] == 0, agg
-
-    rec = {
-        "bench": "pdf_images",
-        "n_docs": n,
+    return {
         "n_images": 2 * n,
-        "cpus": args.cpus,
         "synth_wall_s": synth_wall,
         "extract_wall_s": extract_wall,
         "docs_per_sec": round(n / extract_wall),
         "images_per_sec": round(2 * n / extract_wall),
         "bytes_out": int(agg["bytes_out"]),
-        "ts": int(time.time()),
     }
-    print(
-        f"synth {synth_wall:7.2f} s   extract {extract_wall:7.2f} s "
-        f"({rec['docs_per_sec']:,} docs/s, {rec['images_per_sec']:,} images/s)"
-    )
-    with open(HIST, "a") as f:
-        f.write(json.dumps(rec) + "\n")
-    docs.unpersist()
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

@@ -15,21 +15,19 @@ Exactness asserted:
   * holdout_split over the prune cliques: ZERO planted pairs straddle the
     train/eval boundary (the leakage property at scale).
 
-Usage: python scripts/bench_semantic.py [--n 200000] [--per-cluster 100]
-Appends a JSON line to BENCH/semantic_history.jsonl and prints it.
+Run: python bench.py --suite semantic [--scale 200000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
 from pyspark.sql import functions as F
+
+SCALE = 200_000
+DIM = 64
+PER_CLUSTER = 100
+KMEANS_ITERS = 2
 
 
 def _u(seed_cols):
@@ -59,33 +57,20 @@ def synth_embeddings(spark, n: int, dim: int, n_modes: int):
     )
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--n", type=int, default=200_000)
-    ap.add_argument("--dim", type=int, default=64)
-    ap.add_argument("--per-cluster", type=int, default=100)
-    ap.add_argument("--kmeans-iters", type=int, default=2)
-    ap.add_argument(
-        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", 32))
-    )
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from ocr_spark.operators.corpus_clean import holdout_split
     from ocr_spark.operators.semantic import kmeans_train, semantic_prune
     from ocr_spark.session import get_spark
 
-    spark = get_spark(
-        "bench_semantic", cpus=args.cpus, shuffle_partitions=args.cpus
-    )
-    n, dim = args.n, args.dim
-    n_modes = max(2, n // args.per_cluster)  # cluster size ~ per_cluster
+    spark = get_spark("bench_semantic", cpus=cpus, shuffle_partitions=cpus)
+    n_modes = max(2, n // PER_CLUSTER)  # cluster size ~ PER_CLUSTER
     k = n_modes
-    emb = synth_embeddings(spark, n, dim, n_modes).persist()
+    emb = synth_embeddings(spark, n, DIM, n_modes).persist()
     emb.count()
 
     t0 = time.time()
     st_km: dict = {}
-    C = kmeans_train(emb, k=k, iters=args.kmeans_iters, stats=st_km)
+    C = kmeans_train(emb, k=k, iters=KMEANS_ITERS, stats=st_km)
     t_train = time.time() - t0
 
     t0 = time.time()
@@ -149,10 +134,8 @@ def main() -> None:
     pruned.unpersist()
     emb.unpersist()
 
-    row = {
-        "metric": "semantic_prune_e2e",
-        "n": n,
-        "dim": dim,
+    return {
+        "dim": DIM,
         "k": k,
         "kmeans_iters": st_km.get("iters_run"),
         "train_sec": round(t_train, 3),
@@ -165,14 +148,4 @@ def main() -> None:
         "prune_docs_per_sec": round(n / t_prune, 1),
         "cluster_rounds": st_pr.get("rounds"),
         "cluster_algorithm": st_pr.get("algorithm"),
-        "cpus": args.cpus,
-        "ts": int(time.time()),
     }
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/semantic_history.jsonl", "a") as f:
-        f.write(json.dumps(row) + "\n")
-    print(json.dumps(row))
-
-
-if __name__ == "__main__":
-    main()

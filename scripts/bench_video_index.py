@@ -12,22 +12,14 @@ parameters, so the assertions are exact, not statistical):
 - byte accounting: sum(n_bytes) == N × Σ planted sizes, and every sliced
   payload length equals its index row's n_bytes.
 
-Run: python scripts/bench_video_index.py [--assets 200000] [--cpus 32]
-Appends one JSON line to BENCH/video_index_history.jsonl.
+Run: python bench.py --suite video_index [--scale 200000]
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import os
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-HIST = os.path.join(REPO, "BENCH", "video_index_history.jsonl")
+SCALE = 200_000
 
 FRAMES = 24
 KEY_EVERY = 6
@@ -38,19 +30,13 @@ def _sizes(aid: int) -> list[int]:
     return [40 + ((aid * 7 + i * 13) % 50) for i in range(FRAMES)]
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--assets", type=int, default=200_000)
-    ap.add_argument("--cpus", type=int, default=32)
-    args = ap.parse_args()
-
+def run(n: int, cpus: int) -> dict:
     from pyspark.sql import functions as F
 
     from ocr_spark.operators.multimodal import video_frame_index
     from ocr_spark.session import get_spark
 
-    spark = get_spark("bench_video_index", cpus=args.cpus)
-    n = args.assets
+    spark = get_spark("bench_video_index", cpus=cpus)
 
     def gen(batches):
         import pandas as pd
@@ -77,7 +63,7 @@ def main() -> None:
     t0 = time.time()
     assets = (
         spark.range(n)
-        .repartition(4 * args.cpus)
+        .repartition(4 * cpus)
         .mapInPandas(gen, schema="media_ref string, content binary")
         .persist()
     )
@@ -111,13 +97,10 @@ def main() -> None:
         F.sum((~F.col("is_keyframe")).cast("long")).alias("nonkey"),
     ).first()
     kf_wall = round(time.time() - t0, 2)
+    assets.unpersist()
     assert kagg["rows"] == n * -(-FRAMES // KEY_EVERY) and kagg["nonkey"] == 0
-
-    rec = {
-        "bench": "video_frame_index",
-        "n_assets": n,
+    return {
         "frames_per_asset": FRAMES,
-        "cpus": args.cpus,
         "synth_wall_s": synth_wall,
         "full_index": {
             "wall_s": full_wall,
@@ -129,20 +112,4 @@ def main() -> None:
             "wall_s": kf_wall,
             "assets_per_sec": round(n / kf_wall),
         },
-        "ts": int(time.time()),
     }
-    print(
-        f"synth  {synth_wall:7.2f} s   full-index {full_wall:7.2f} s "
-        f"({rec['full_index']['frames_per_sec']:,} frames/s, "
-        f"{rec['full_index']['assets_per_sec']:,} assets/s)   "
-        f"keyframes {kf_wall:7.2f} s "
-        f"({rec['keyframe_only']['assets_per_sec']:,} assets/s)"
-    )
-    with open(HIST, "a") as f:
-        f.write(json.dumps(rec) + "\n")
-    assets.unpersist()
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

@@ -39,7 +39,7 @@ def _batch(docs: list[list[tuple[str, str | None, str | None, int]]]) -> pa.Reco
 
 
 def _run(batch, **kw):
-    out = _process_batch(batch, rules=[], backend="synthetic", **kw)
+    out = _process_batch(batch, rules=[], **kw)
     return {
         out.column("doc_id")[i].as_py(): {
             "error": out.column("error")[i].as_py(),
@@ -96,8 +96,8 @@ def test_poison_payload_degrades_per_doc(monkeypatch):
 
     real_resolve = media_src.resolve_gray_batch
 
-    def resolve(refs, backend="synthetic"):
-        grays, ok = real_resolve([r if r != "POISON" else "x" for r in refs], backend)
+    def resolve(refs):
+        grays, ok = real_resolve([r if r != "POISON" else "x" for r in refs])
         for i, r in enumerate(refs):
             if r == "POISON":
                 grays[i] = 255
