@@ -12,14 +12,14 @@ queries from __spark_entry__ over the driver tables. All timed executions
 force full computation via the `noop` sink (no output-write cost, no
 collect-to-driver bottleneck).
 
-`python bench.py --suite NAME [--scale N] [--cpus C] [--runs R]` runs one
-scale suite, scripts/bench_NAME.py, which holds only a `SCALE` default and
-`run(n, cpus) -> dict` (build the input, time the phases, assert exactness).
-The harness calls `run` R times (with R >= 2 the first call is a warm-up),
-stops any Spark session the suite started, and prints one JSON line: the
-suite's record of the last call, min/median/max wall seconds over the timed
-calls, and a fingerprint (commit, cpus, nproc, library versions). The line
-is appended to BENCH/history.jsonl tagged with "suite": NAME.
+`python bench.py --suite NAME [--scale N] [--cpus C]` runs one scale suite,
+scripts/bench_NAME.py, which holds only a `SCALE` default and
+`run(n, cpus) -> dict` (build the input, warm up where it needs to, time the
+phases, assert exactness). The harness calls `run` once, stops any Spark
+session the suite started, and prints one JSON line: the suite's record, the
+wall seconds of the call and a fingerprint (commit, cpus, nproc, library
+versions). The line is appended to BENCH/history.jsonl tagged with
+"suite": NAME.
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ import importlib.util
 import json
 import os
 import platform
-import statistics
 import subprocess
 import sys
 import time
@@ -228,31 +227,23 @@ def _active_spark():
     return SparkSession.getActiveSession()
 
 
-def run_suite(name: str, scale: int | None, cpus: int, runs: int) -> None:
+def run_suite(name: str, scale: int | None, cpus: int) -> None:
     mod = _load_suite(name)
     n = mod.SCALE if scale is None else scale
     before = _active_spark()
-    walls: list[float] = []
     try:
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            rec = mod.run(n, cpus)
-            walls.append(time.perf_counter() - t0)
+        t0 = time.perf_counter()
+        rec = mod.run(n, cpus)
+        wall = time.perf_counter() - t0
     finally:
         started = _active_spark()
         if started is not None and started is not before:
             started.stop()
-    timed = walls[1:] if runs >= 2 else walls
     line = {
         "suite": name,
         "scale": n,
         **_fingerprint(cpus),
-        "runs": runs,
-        "wall_s": {
-            "min": round(min(timed), 3),
-            "median": round(statistics.median(timed), 3),
-            "max": round(max(timed), 3),
-        },
+        "wall_s": round(wall, 3),
         "ts": int(time.time()),
         "result": rec,
     }
@@ -270,7 +261,6 @@ def parser() -> argparse.ArgumentParser:
         default=int(os.environ.get("SPARK_GRAFT_CPUS", NPROC)),
         help="local[] parallelism; default $SPARK_GRAFT_CPUS, else nproc",
     )
-    ap.add_argument("--runs", type=int, default=1, help="timed calls; with >= 2 the first is a warm-up")
     return ap
 
 
@@ -280,7 +270,7 @@ def main(argv: list[str] | None = None) -> None:
         driver()
         return
     args = parser().parse_args(argv)
-    run_suite(args.suite, args.scale, args.cpus, max(1, args.runs))
+    run_suite(args.suite, args.scale, args.cpus)
 
 
 if __name__ == "__main__":

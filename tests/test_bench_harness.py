@@ -1,6 +1,6 @@
 """The bench harness contract: every scripts/bench_*.py is a suite module
 (an int SCALE and a run function, no argument parsing, no history file of
-its own), bench.py takes exactly four flags, and one suite run prints one
+its own), bench.py takes exactly three flags, and one suite run prints one
 JSON line and appends exactly one line to the history file."""
 
 import ast
@@ -37,19 +37,19 @@ def test_suite_module_shape(path):
             assert "hist" not in ast.unparse(node.args[0]).lower()
 
 
-def test_bench_accepts_only_the_four_flags():
+def test_bench_accepts_only_the_three_flags():
     flags = {s for a in bench.parser()._actions for s in a.option_strings}
-    assert flags - {"-h", "--help"} == {"--suite", "--scale", "--cpus", "--runs"}
+    assert flags - {"-h", "--help"} == {"--suite", "--scale", "--cpus"}
 
 
 def test_suite_run_prints_one_line_and_appends_one(tmp_path, monkeypatch, capsys):
     hist = tmp_path / "history.jsonl"
     monkeypatch.setattr(bench, "HISTORY", str(hist))
-    bench.main(["--suite", "cc", "--scale", "64", "--cpus", "2", "--runs", "2"])
+    bench.main(["--suite", "cc", "--scale", "64", "--cpus", "2"])
     out = capsys.readouterr().out.splitlines()
     assert len(out) == 1
     line = json.loads(out[0])
-    assert (line["suite"], line["scale"], line["cpus"], line["runs"]) == ("cc", 64, 2, 2)
-    assert "commit" in line and line["wall_s"]["min"] <= line["wall_s"]["max"]
+    assert (line["suite"], line["scale"], line["cpus"]) == ("cc", 64, 2)
+    assert "commit" in line and line["wall_s"] > 0
     assert set(line["result"]) == {"noisy", "sparse-text"}
     assert [json.loads(x) for x in hist.read_text().splitlines()] == [line]
